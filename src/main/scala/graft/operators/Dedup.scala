@@ -1,10 +1,16 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /**
  * Document deduplication for LLM-data pipelines (SURVEY §7.4): exact,
@@ -595,181 +601,142 @@ object Dedup {
    * CLUSTERS — a near-dup of a near-dup is the same document family,
    * so survivors must be picked per transitive component, not per pair
    * (pairwise keep-the-smaller both keeps and drops the middle doc of a
-   * chain a-b-c). Returns (`id`, `component`) for every vertex of the
-   * pair graph, where `component` is the MINIMUM id reachable from the
-   * vertex — deterministic, and directly usable as the canonical
-   * survivor id.
+   * chain a-b-c). Returns (`id`, `comp`) for every vertex of the pair
+   * graph, where `comp` is the MINIMUM id reachable from the vertex —
+   * deterministic, and directly usable as the canonical survivor id.
+   * Ids are integral (kept in their type; mixed widths come back as
+   * bigint) or string (Spark's binary order); other types are rejected.
+   * A pair with a null end adds no vertex; a self-loop (a, a) adds `a`.
    *
-   * Algorithm: iterative min-label propagation. Each round every vertex
-   * takes the min of its own label and its neighbors' labels (one
-   * edges-labels equi-join + a groupBy-min keyed on vertex id); stop
-   * when a round changes nothing. Rounds needed = the graph's maximum
-   * component DIAMETER, which for near-dup graphs is small by
-   * construction: blocked candidate clusters are dense (star-ish under
-   * [[Blocking.idPairsWithReps]], near-cliques from shared blocks), not
-   * long chains. `maxIter` bounds the propagation; a pathological
-   * long-chain graph that exceeds it FALLS BACK to the log-round
-   * alternating large-star/small-star formulation
-   * ([[connectedComponentsAlternating]] — Kiveris et al., "Connected
-   * Components in MapReduce and Beyond"), whose round count is
-   * O(log² n) regardless of diameter, instead of failing or silently
-   * emitting half-merged components.
+   * Algorithm: alternating large-star / small-star rounds (Kiveris et
+   * al., "Connected Components in MapReduce and Beyond", SoCC 2014):
+   * O(log² n) rounds whatever the diameter (a 10⁵-long chain takes 17).
+   *  - LARGE-STAR, per vertex u: m = min(N(u) ∪ {u}); every neighbour
+   *    v > u re-points at m.
+   *  - SMALL-STAR, per vertex u over its smaller neighbours: m = min;
+   *    u and every smaller neighbour except m re-point at m.
+   * Rounds stop at the first whose output is a forest of stars, each
+   * centred on its smallest vertex — the component minimum. More than
+   * 64 rounds throws; a half-merged labelling is never returned.
    *
-   * 100 TB design: state per round is one (id, label) row per vertex of
-   * the PAIR GRAPH (near-dup members only — far smaller than the
-   * corpus) shuffled on the same id key each round; `localCheckpoint`
-   * truncates the growing lineage so round N's plan does not re-execute
-   * rounds 1..N-1; the convergence check rides the same propagation
-   * aggregate as an `observe` (no second job per round).
+   * 100 TB design: one Spark job per round (`graft:Dedup.
+   * connectedComponents.round<N>`; the pair subplan's own stage jobs
+   * are `...edges`). The state is the adjacency shuffled by vertex with
+   * one fixed `HashPartitioner` (the pair RDD's partition count). Each
+   * half-round takes the per-vertex min with a `reduceByKey` on the
+   * already partitioned edges (narrow) and rewires the edges per
+   * partition through `zipPartitions` against a vertex→min map, so a
+   * hub's neighbour list is streamed, never held. The round output is
+   * `localCheckpoint`ed by the action that tests it for stars. The
+   * returned frame is lazy: the per-vertex min over the last round.
    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25): DataFrame = {
-    val edges = symmetrizedEdges(pairs, aCol, bCol)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
-    // empty pair graph: nothing to propagate (and an empty frame would
-    // lose its observed convergence metrics to AQE empty-relation
-    // propagation — see GraftColumnBridge.observationGetOrEmpty)
-    if (labels.isEmpty) return labels
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      val fromNeighbors = edges.join(labels.select(col("id").as("src"),
-          col("comp")), "src")
-        .select(col("dst").as("id"), col("comp"))
-      val obs = new Observation(s"graft_cc_round_$it")
-      val next = labels.unionAll(fromNeighbors)
-        .groupBy(col("id")).agg(min(col("comp")).as("new_comp"))
-      // join against the previous labels to count changes; the count is
-      // observed on the SAME execution that materializes the new state
-      val prev = labels
-      val staged = next.join(labels.select(col("id"), col("comp").as("old_comp")), "id")
-        .select(col("id"), col("new_comp").as("comp"),
-          (col("new_comp") =!= col("old_comp")).as("__changed"))
-        .observe(obs, sum(when(col("__changed"), lit(1L)).otherwise(lit(0L)))
-          .as("changed"))
-        .select("id", "comp")
-        .localCheckpoint(true)
-      labels = staged
-      val changed = org.apache.spark.sql.GraftColumnBridge
-        .observationGetOrEmpty(obs, maxWaitMs = 1000).get("changed") match {
-        case Some(c: Long) => c
-        case _ =>
-          // no signal (the listener bus can drop SQL-execution events
-          // under backpressure): recount directly from the two
-          // checkpointed label states instead of assuming non-converged
-          // — otherwise an already-converged run would spin to maxIter
-          // and throw a misleading diameter error
-          labels.join(prev.select(col("id"), col("comp").as("old_comp")), "id")
-            .filter(col("comp") =!= col("old_comp")).count()
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxRounds = 64)
+
+  private[graft] def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
+                                         maxRounds: Int): DataFrame = {
+    val (ta, tb) = (pairs.schema(aCol).dataType, pairs.schema(bCol).dataType)
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    if (integral(ta) && integral(tb)) {
+      val idType = if (ta == tb) ta else LongType
+      components[Long](pairs.select(col(aCol).cast(LongType), col(bCol).cast(LongType)),
+          maxRounds, LongType)(_.getLong(_), identity)
+        .select(col("id").cast(idType), col("comp").cast(idType))
+    } else (ta, tb) match {
+      case (_: StringType, _: StringType) =>
+        implicit val binaryOrder: Ordering[UTF8String] = (x, y) => x.binaryCompare(y)
+        components[UTF8String](pairs.select(col(aCol), col(bCol)), maxRounds, ta)(
+          _.getUTF8String(_).clone(), _.toString)
+      case _ => throw new IllegalArgumentException("connectedComponents needs integral or " +
+        s"string ids, got $aCol: ${ta.simpleString}, $bCol: ${tb.simpleString}")
+    }
+  }
+
+  /** The rounds over the two-column `ends` frame, each under its job
+    * description (the caller's is restored), and the lazy result frame:
+    * a vertex's smallest neighbour-or-self in the converged adjacency is
+    * its star's centre. */
+  private def components[K: ClassTag](ends: DataFrame, maxRounds: Int, idType: DataType)
+                                     (get: (InternalRow, Int) => K, out: K => Any)
+                                     (implicit ord: Ordering[K]): DataFrame = {
+    val sc = ends.sparkSession.sparkContext
+    val callerDesc = sc.getLocalProperty("spark.job.description")
+    val adj = try {
+      // planning the pair frame's RDD runs its AQE stage jobs
+      sc.setJobDescription("graft:Dedup.connectedComponents.edges")
+      val edges = ends.queryExecution.toRdd.flatMap(r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) None else Some((get(r, 0), get(r, 1))))
+      val part = new HashPartitioner(math.max(1, edges.getNumPartitions))
+      var adj = adjacency(edges, part)
+      var round = 0
+      var converged = false
+      while (!converged) {
+        if (round == maxRounds) throw new IllegalStateException(
+          s"connectedComponents: large-star/small-star did not converge in $maxRounds rounds")
+        round += 1
+        sc.setJobDescription(s"graft:Dedup.connectedComponents.round$round")
+        val next = adjacency(smallStar(largeStar(adj), part), part).localCheckpoint()
+        // the action that materialises the round also tests it
+        converged = next.mapPartitions(it => Iterator.single(nonStarVertices(it)))
+          .reduce(_ + _) == 0L
+        if (round > 1) adj.unpersist(blocking = false)
+        adj = next
       }
-      converged = changed == 0L
-      it += 1
-    }
-    if (converged) labels
-    else alternatingCC(edges) // diameter exceeds maxIter: log-round fallback
+      adj
+    } finally sc.setJobDescription(callerDesc)
+    ends.sparkSession.createDataFrame(
+      vertexMins(adj).map { case (u, r) => Row(out(u), out(r)) },
+      StructType(Seq("id", "comp").map(StructField(_, idType, nullable = false))))
   }
 
-  /** Undirected, deduped, checkpointed (src, dst) edge list for a pairs
-    * frame — both directions of every pair. Symmetrize with a per-row
-    * generator, not a self-union: a union's branches would each execute
-    * the (often expensive) blocker+verify pair subplan, and
-    * materializing an intermediate copy first would leave a redundant
-    * pairs-sized checkpoint pinned in executor storage for the whole
-    * propagation. One pass, one checkpoint. */
-  private def symmetrizedEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
-    pairs
-      .select(explode(array(
-          struct(col(aCol).as("src"), col(bCol).as("dst")),
-          struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .distinct()
-      .localCheckpoint(true)
+  /** Both directions of every edge (a self-loop once), shuffled by vertex. */
+  private def adjacency[K: ClassTag](edges: RDD[(K, K)], part: Partitioner): RDD[(K, K)] =
+    edges.flatMap { case (u, v) =>
+      if (u == v) Iterator.single((u, v)) else Iterator((u, v), (v, u)) }
+      .partitionBy(part)
 
-  /**
-   * Connected components via ALTERNATING large-star/small-star rounds
-   * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-   * the diameter-independent formulation [[connectedComponents]] falls
-   * back to when min-label propagation exceeds its round bound. Same
-   * output contract: (`id`, `comp` = minimum reachable id) for every
-   * vertex of the pair graph.
-   *
-   * Each round rewrites the edge set toward per-component stars:
-   *  - LARGE-STAR (per node u over its full neighborhood N(u)):
-   *    m = min(N(u) ∪ {u}); every STRICTLY LARGER neighbor v > u is
-   *    re-pointed at m — edges (v, m). Long tails collapse toward
-   *    local minima without ever disconnecting a component (u stays
-   *    reachable via its own entry in some neighbor's reduce).
-   *  - SMALL-STAR (per node u over its SMALLER neighbors): m = min;
-   *    u and every smaller neighbor except m re-point at m.
-   * The per-component minimum is a fixpoint root; the edge set
-   * converges to exact stars (member, root) in O(log² n) rounds on
-   * adversarial graphs, O(log n) in practice — vs DIAMETER rounds for
-   * label propagation (a 10⁶-long chain needs ~20 rounds here, 10⁶
-   * there).
-   *
-   * 100 TB design: each half-round is one groupBy-min + one equi-join
-   * on the same key — all shuffles keyed on vertex id, state is the
-   * edge list itself (monotonically shrinking toward one edge per
-   * non-root vertex), `localCheckpoint` truncates lineage per round.
-   * Convergence = the (count, hash-sum) signature of the edge set
-   * repeating — one cheap aggregate over the just-checkpointed round
-   * result, no full except/join comparison.
-   */
-  def connectedComponentsAlternating(pairs: DataFrame, aCol: String, bCol: String,
-                                     maxRounds: Int = 64): DataFrame = {
-    val edges = symmetrizedEdges(pairs, aCol, bCol)
-    if (edges.isEmpty)
-      edges.select(col("src").as("id"), col("src").as("comp"))
-    else alternatingCC(edges, maxRounds)
-  }
+  /** Large-star over a vertex-partitioned adjacency; outputs big → small. */
+  private def largeStar[K: ClassTag](adj: RDD[(K, K)])(implicit ord: Ordering[K]): RDD[(K, K)] =
+    starStep(adj, roots = false) { (u, v, m) =>
+      if (ord.gt(v, u)) Some((v, m)) else if (v == u) Some((u, m)) else None }
 
-  /** The alternating rounds over a symmetrized edge frame (see
-    * [[connectedComponentsAlternating]] for semantics and scale notes). */
-  private def alternatingCC(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
-    var e = edges.select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v"))
-    var signature = (-1L, 0L)
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      // large-star: m(u) = min(N(u) ∪ {u}); re-point every v > u at m(u)
-      val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy("u").agg(min(col("v")).as("__mv"))
-        .select(col("u"), least(col("__mv"), col("u")).as("__m"))
-      val ls = sym.join(lsMin, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("__m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // small-star: over edges directed big -> small, m(u) = min smaller
-      // neighbor; u and every smaller neighbor except m re-point at m
-      val dir = ls.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val ssMin = dir.groupBy("u").agg(min(col("v")).as("__m"))
-      e = dir.join(ssMin, "u")
-        .filter(col("v") =!= col("__m"))
-        .select(col("v").as("u"), col("__m").as("v"))
-        .unionAll(ssMin.select(col("u"), col("__m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(true)
-      // edge-set signature off the checkpoint just materialized (cheap:
-      // re-reads cached partitions, no recompute)
-      val sig = e.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v"))), lit(0L))).head()
-      val now = (sig.getLong(0), sig.getLong(1))
-      converged = now == signature
-      signature = now
-      round += 1
+  /** Small-star over big → small edges, re-partitioned by their source. */
+  private def smallStar[K: ClassTag: Ordering](edges: RDD[(K, K)],
+                                               part: Partitioner): RDD[(K, K)] =
+    starStep(edges.partitionBy(part), roots = true) { (u, v, m) =>
+      if (v != m && v != u) Some((v, m)) else None }
+
+  /** One half-round over vertex-partitioned edges: rewire every edge
+    * (u, v) from a per-partition u → m(u) map (edges stream, only the
+    * map is held); `roots` also emits (u, m(u)) once per vertex, so a
+    * lone self-loop stays (u, u), marking the vertex. */
+  private def starStep[K: ClassTag: Ordering](byVertex: RDD[(K, K)], roots: Boolean)
+                                             (rewire: (K, K, K) => Option[(K, K)]): RDD[(K, K)] =
+    byVertex.zipPartitions(vertexMins(byVertex)) { (es, ms) =>
+      val m = mutable.HashMap.from(ms)
+      val rewired = es.flatMap { case (u, v) => rewire(u, v, m(u)) }
+      if (roots) m.iterator ++ rewired else rewired
     }
-    require(converged,
-      s"alternating large-star/small-star did not converge in $maxRounds rounds")
-    // fixpoint edge set = stars: (member, component root). min() guards
-    // the (never-observed) case of a transiently duplicated member row.
-    val verts = edges.select(col("src").as("id")).distinct()
-    verts.join(e.groupBy(col("u").as("id")).agg(min(col("v")).as("__c")),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("__c"), col("id")).as("comp"))
+
+  /** (u, min(u, N(u))) per vertex of a vertex-partitioned edge RDD: a
+    * reduceByKey on its own partitioner, so no shuffle. */
+  private def vertexMins[K: ClassTag](byVertex: RDD[(K, K)])
+                                     (implicit ord: Ordering[K]): RDD[(K, K)] =
+    byVertex.reduceByKey(byVertex.partitioner.get, ord.min(_, _))
+      .mapPartitions(_.map { case (u, mv) => (u, ord.min(u, mv)) }, preservesPartitioning = true)
+
+  /** Vertices of one adjacency partition that break the converged shape
+    * (stars centred on their smallest vertex): two distinct smaller
+    * neighbours, or both smaller and larger ones. */
+  private def nonStarVertices[K](adj: Iterator[(K, K)])(implicit ord: Ordering[K]): Long = {
+    val centre = mutable.HashMap.empty[K, K]
+    val bad = mutable.HashSet.empty[K]
+    val hasLarger = mutable.HashSet.empty[K]
+    adj.foreach { case (u, v) =>
+      if (ord.lt(v, u)) { if (centre.getOrElseUpdate(u, v) != v) bad += u }
+      else if (ord.gt(v, u)) hasLarger += u
+    }
+    (bad ++ centre.keysIterator.filter(hasLarger)).size.toLong
   }
 
   /**
@@ -792,9 +759,8 @@ object Dedup {
    * against the tiny per-component survivor table.
    */
   def collapseNearDups(docs: DataFrame, idCol: String,
-                       pairs: DataFrame, aCol: String, bCol: String,
-                       maxIter: Int = 25): DataFrame = {
-    val comps = connectedComponents(pairs, aCol, bCol, maxIter)
+                       pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val comps = connectedComponents(pairs, aCol, bCol)
       .select(col("id").as(idCol), col("comp"))
     // min id per component among the docs ACTUALLY PRESENT
     val survivors = comps.join(docs.select(col(idCol)), Seq(idCol))
@@ -830,9 +796,8 @@ object Dedup {
    * spaces — non-negative counters, hashes into [0, 2^63) — are fine).
    */
   def collapseNearDupsBest(docs: DataFrame, idCol: String, scoreCol: String,
-                           pairs: DataFrame, aCol: String, bCol: String,
-                           maxIter: Int = 25): DataFrame = {
-    val comps = connectedComponents(pairs, aCol, bCol, maxIter)
+                           pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val comps = connectedComponents(pairs, aCol, bCol)
       .select(col("id").as(idCol), col("comp"))
     // argmax(score, then min id) among present docs: max of a struct
     // ordered by (score asc, negated id asc) -> its id field is the
@@ -877,9 +842,8 @@ object Dedup {
    * blocker's cap metrics long before this aggregate sees it.
    */
   def collapseLineage(docs: DataFrame, idCol: String,
-                      pairs: DataFrame, aCol: String, bCol: String,
-                      maxIter: Int = 25): DataFrame = {
-    val comps = connectedComponents(pairs, aCol, bCol, maxIter)
+                      pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val comps = connectedComponents(pairs, aCol, bCol)
       .select(col("id").as(idCol), col("comp"))
     docs.select(col(idCol))
       .join(comps, Seq(idCol), "left")
@@ -908,9 +872,8 @@ object Dedup {
    * aggregate — cardinality = number of strata.
    */
   def dedupRatesBy(docs: DataFrame, idCol: String, stratumCol: String,
-                   pairs: DataFrame, aCol: String, bCol: String,
-                   maxIter: Int = 25): DataFrame = {
-    val kept = collapseNearDups(docs, idCol, pairs, aCol, bCol, maxIter)
+                   pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val kept = collapseNearDups(docs, idCol, pairs, aCol, bCol)
       .select(col(idCol), lit(1L).as("__kept"))
     docs.select(col(idCol), col(stratumCol))
       .join(kept, Seq(idCol), "left")

@@ -337,9 +337,10 @@ object Sampling {
    * MERGE two components (then the merged family re-draws together —
    * the conservative direction: families never straddle).
    *
-   * 100 TB design: component labels come from the iterative min-label
-   * propagation ([[Dedup.connectedComponents]] — pair-frame-bounded,
-   * checkpointed), the label join is one shuffle bounded by the docs
+   * 100 TB design: component labels come from the large-star/small-star
+   * rounds of [[Dedup.connectedComponents]] (pair-graph-bounded, one
+   * checkpointed job per round, O(log² n) rounds at any diameter), the
+   * label join is one shuffle bounded by the docs
    * that HAVE a near-dup (AQE broadcasts it when small), and the split
    * itself stays a zero-shuffle codegen'd projection.
    */

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /**
  * CPU-dense scan FAN-OUT — guide §2.5's "input skew: one huge
@@ -43,18 +44,32 @@ import org.apache.spark.sql.DataFrame
  */
 object ScanFanOut {
   private[graft] def maxBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_FANOUT_MAX_BYTES",
-      (256L * 1024 * 1024).toString).toLong
+    parseMaxBytes(sys.env.get("SPARK_GRAFT_FANOUT_MAX_BYTES"))
+
+  /** The threshold from the env value: 256 MB when unset; anything but
+    * a non-negative byte count fails, naming the variable. */
+  private[graft] def parseMaxBytes(raw: Option[String]): Long =
+    raw.fold(256L * 1024 * 1024) { s =>
+      s.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_FANOUT_MAX_BYTES must be a non-negative byte count, got '$s'"))
+    }
+
+  /** An optimizer size estimate; a non-fatal failure to estimate reads
+    * as unknown (Long.MaxValue, so the fan-out skips), fatal errors and
+    * interrupts propagate. */
+  private[graft] def sizeEstimate(stats: => BigInt): BigInt =
+    try stats catch { case NonFatal(_) => BigInt(Long.MaxValue) }
 
   /** `df` repartitioned to the session's default parallelism when its
     * optimizer size estimate is small enough that a one-task scan
     * would serialize the downstream kernel; `df` unchanged otherwise.
     * Idempotent: a frame that already carries a >= cores round-robin
     * repartition (an upstream fan-out — e.g. the query fanned the
-    * source before building derived columns) is NOT re-shuffled. */
+    * source before building derived columns) is NOT re-shuffled. A
+    * streaming frame is returned unchanged. */
   private[graft] def apply(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (cores <= 1) df
+    if (cores <= 1 || df.isStreaming) df
     else {
       val fanned = df.queryExecution.analyzed.exists {
         case r: org.apache.spark.sql.catalyst.plans.logical.Repartition =>
@@ -64,9 +79,7 @@ object ScanFanOut {
       // optimizedPlan.stats is driver-side estimation only (no jobs);
       // unknown sizes surface as defaultSizeInBytes = Long.MaxValue
       // and skip the fan-out — the safe failure mode.
-      val est =
-        try df.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case _: Throwable => BigInt(Long.MaxValue) }
+      val est = sizeEstimate(df.queryExecution.optimizedPlan.stats.sizeInBytes)
       if (!fanned && est <= BigInt(maxBytes)) df.repartition(cores) else df
     }
   }

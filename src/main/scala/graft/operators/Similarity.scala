@@ -307,9 +307,12 @@ object Similarity extends Logging {
    *
    * 100 TB design inherits both composed parts: the pair graph is
    * bucket-join-generated and capped ([[srpCandidatePairs]]'s
-   * `bucketCap`), and the component collapse touches the corpus-sized
-   * frame with exactly one left join (survivor selection runs on the
-   * pair-graph side, which is duplicate-volume-sized, not
+   * `bucketCap`); the components come from
+   * [[graft.operators.Dedup.connectedComponents]]' large-star/small-star
+   * rounds — one Spark job per round over the pair graph, reading the
+   * pair frame's RDD directly — and the collapse touches the
+   * corpus-sized frame with exactly one left join (survivor selection
+   * runs on the pair-graph side, which is duplicate-volume-sized, not
    * corpus-sized).
    */
   def semanticCollapse(corpus: DataFrame, idCol: String, vecCol: String,

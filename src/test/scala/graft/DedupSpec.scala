@@ -378,42 +378,83 @@ class DedupSpec extends AnyFunSuite {
     // empty pair graph: empty result, no convergence failure
     assert(Dedup.connectedComponents(
       pairs.filter(lit(false)), "doc_a", "doc_b").isEmpty)
-    // maxIter too small for the diameter: the alternating star fallback
-    // must still produce fully-merged components, never a half-merged
-    // result (VERDICT r7 #4 — this used to throw)
-    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (6L, 7L), (7L, 8L)).toDF("doc_a", "doc_b")
-    val viaFallback = Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaFallback == (1L to 8L).map(_ -> 1L).toMap)
+    // the round bound throws rather than return half-merged labels
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxRounds = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
+    // ids other than integral or string fail, naming their type
+    val bad = intercept[IllegalArgumentException](Dedup.connectedComponents(
+      Seq((1.0, 2.0)).toDF("doc_a", "doc_b"), "doc_a", "doc_b"))
+    assert(bad.getMessage.contains("double"))
   }
 
-  test("long-chain graph (diameter > default maxIter) converges via alternating stars") {
-    // a 61-vertex path: min-label propagation moves the min one hop per
-    // round, so the default 25-round bound cannot close it — the
-    // diameter-independent fallback must
-    val pairs = (0L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val comps = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(comps == (0L to 60L).map((_, 0L)).toSet)
-  }
-
-  test("alternating CC equals min-label propagation on random graphs") {
-    // the two formulations must agree vertex-for-vertex on arbitrary
-    // structure (dense blobs, chains, isolated pairs alike)
-    for (seed <- Seq(7, 42)) {
-      val rnd = new scala.util.Random(seed)
-      val pairs = Seq.fill(250)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
-        .filter(p => p._1 != p._2).toDF("doc_a", "doc_b")
-      val viaLabels = Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxIter = 100)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val viaStars = Dedup.connectedComponentsAlternating(pairs, "doc_a", "doc_b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(viaStars == viaLabels, s"seed $seed")
+  /** Every vertex's minimum reachable id, by in-memory union-find
+    * (linking the larger root under the smaller keeps roots minimal). */
+  private def unionFind[K](pairs: Seq[(K, K)])(implicit ord: Ordering[K]): Map[K, K] = {
+    val parent = scala.collection.mutable.HashMap.empty[K, K]
+    def find(x: K): K = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    // empty pair graph: empty result, no convergence failure
-    val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    assert(Dedup.connectedComponentsAlternating(empty, "doc_a", "doc_b").isEmpty)
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  private def ccMap[K](pairs: org.apache.spark.sql.DataFrame): Map[K, K] = {
+    val comps = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    assert(comps.schema.map(_.dataType) == Seq.fill(2)(pairs.schema("doc_a").dataType),
+      "ids keep their type")
+    val rows = comps.collect().toSeq.map(r => r.getAs[K](0) -> r.getAs[K](1))
+    assert(rows.map(_._1).distinct.length == rows.length, "one row per vertex")
+    rows.toMap
+  }
+
+  test("connectedComponents equals a union-find oracle on varied graphs") {
+    for (seed <- Seq(7, 42, 1234)) {
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(250)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      assert(ccMap[Long](edges.toDF("doc_a", "doc_b")) == unionFind(edges), s"seed $seed")
+    }
+    val path = (0L until 60L).map(i => (i, i + 1))              // 61 vertices
+    val star = (1L to 10000L).map(leaf => (5000L, leaf))        // 10^4 leaves
+    val cliques = for (base <- Seq(0L, 100L); a <- 1L to 8L; b <- a + 1 to 8L)
+      yield (base + a, base + b)
+    val bridged = cliques :+ ((8L, 101L))
+    val messy = Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (4L, 5L), (5L, 4L),
+      (5L, 5L), (2L, 6L), (6L, 2L))                             // dups, reversals, self-loops
+    // the path 0-2-3-4-1 leaves vertex 2 under two centres (0, 1) after round 1
+    val zigzag = Seq((0L, 2L), (3L, 4L), (2L, 3L), (1L, 4L))
+    for ((name, edges) <- Seq("path" -> path, "star" -> star, "cliques" -> bridged,
+        "messy" -> messy, "zigzag" -> zigzag))
+      assert(ccMap[Long](edges.toDF("doc_a", "doc_b")) == unionFind(edges), name)
+    val asInt = bridged.map { case (a, b) => (a.toInt, b.toInt) }
+    assert(ccMap[Int](asInt.toDF("doc_a", "doc_b")) == unionFind(asInt))
+    // string ids: minimum by string order ("n192" < "n92"), not numeric
+    val asString = bridged.map { case (a, b) => (s"n${200 - a}", s"n${200 - b}") }
+    assert(ccMap[String](asString.toDF("doc_a", "doc_b")) == unionFind(asString))
+  }
+
+  test("connectedComponents runs one named Spark job per round") {
+    val sc = spark.sparkContext
+    val group = "graft-cc-job-count"
+    sc.setJobGroup(group, "caller", interruptOnCancel = false)
+    sc.setJobDescription("caller's description")
+    try {
+      // a 6-vertex path is not yet a star forest after rounds 1 and 2
+      val path = (0L until 5L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      val comps = Dedup.connectedComponents(path, "doc_a", "doc_b")
+      val described = org.apache.spark.JobLog.descriptions(sc, group)
+      assert(sc.statusTracker.getJobIdsForGroup(group).length == 3)
+      assert(described == (1 to 3).map(n => s"graft:Dedup.connectedComponents.round$n"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller's description")
+      assert(comps.collect().map(_.getLong(1)).toSet == Set(0L))
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+    }
   }
 
   test("collapseNearDups keeps one doc per component plus all singletons") {

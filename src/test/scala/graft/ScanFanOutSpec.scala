@@ -46,6 +46,27 @@ class ScanFanOutSpec extends AnyFunSuite {
       "above-threshold frames must not fan out")
   }
 
+  test("a streaming frame passes through unchanged") {
+    val stream = spark.readStream.format("rate").load()
+    assert(ScanFanOut(stream) eq stream)
+  }
+
+  test("a malformed SPARK_GRAFT_FANOUT_MAX_BYTES fails naming the variable") {
+    assert(ScanFanOut.parseMaxBytes(None) == 256L * 1024 * 1024)
+    assert(ScanFanOut.parseMaxBytes(Some(" 1024 ")) == 1024L)
+    for (bad <- Seq("256MB", "", "-1", "1e9")) {
+      val e = intercept[IllegalArgumentException](ScanFanOut.parseMaxBytes(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_FANOUT_MAX_BYTES"), bad)
+    }
+  }
+
+  test("size estimation swallows only non-fatal failures") {
+    assert(ScanFanOut.sizeEstimate(throw new IllegalStateException("no stats")) ==
+      BigInt(Long.MaxValue))
+    intercept[InterruptedException](
+      ScanFanOut.sizeEstimate(throw new InterruptedException("cancelled")))
+  }
+
   test("ByteBpeEncode.Model java-serializes to the per-JVM shared instance") {
     val merges = Seq(("74", "68"), ("7468", "65"))
     val m = graft.functions.ByteBpeEncode.modelFor(merges)
