@@ -412,13 +412,27 @@ class DedupSpec extends AnyFunSuite {
     rows.toMap
   }
 
-  test("connectedComponents equals a union-find oracle on varied graphs") {
+  test("alternating CC equals min-label propagation on random graphs") {
+    // the alternating large-star/small-star rounds must give every vertex
+    // the min-label fixed point (its minimum reachable id) on arbitrary
+    // structure: dense blobs, chains, isolated pairs and self-loops alike
     for (seed <- Seq(7, 42, 1234)) {
       val rnd = new scala.util.Random(seed)
       val edges = Seq.fill(250)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
       assert(ccMap[Long](edges.toDF("doc_a", "doc_b")) == unionFind(edges), s"seed $seed")
     }
-    val path = (0L until 60L).map(i => (i, i + 1))              // 61 vertices
+  }
+
+  test("long-chain graph (diameter > default maxIter) converges via alternating stars") {
+    // a 61-vertex path: propagating the min one hop per round would need 60
+    // rounds; the star rounds close it well inside a 20-round bound
+    val path = (0L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val comps = Dedup.connectedComponents(path, "doc_a", "doc_b", maxRounds = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(comps == (0L to 60L).map((_, 0L)).toSet)
+  }
+
+  test("connectedComponents equals a union-find oracle on varied graphs") {
     val star = (1L to 10000L).map(leaf => (5000L, leaf))        // 10^4 leaves
     val cliques = for (base <- Seq(0L, 100L); a <- 1L to 8L; b <- a + 1 to 8L)
       yield (base + a, base + b)
@@ -427,7 +441,7 @@ class DedupSpec extends AnyFunSuite {
       (5L, 5L), (2L, 6L), (6L, 2L))                             // dups, reversals, self-loops
     // the path 0-2-3-4-1 leaves vertex 2 under two centres (0, 1) after round 1
     val zigzag = Seq((0L, 2L), (3L, 4L), (2L, 3L), (1L, 4L))
-    for ((name, edges) <- Seq("path" -> path, "star" -> star, "cliques" -> bridged,
+    for ((name, edges) <- Seq("star" -> star, "cliques" -> bridged,
         "messy" -> messy, "zigzag" -> zigzag))
       assert(ccMap[Long](edges.toDF("doc_a", "doc_b")) == unionFind(edges), name)
     val asInt = bridged.map { case (a, b) => (a.toInt, b.toInt) }
