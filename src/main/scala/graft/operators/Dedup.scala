@@ -5,6 +5,7 @@ import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -604,8 +605,9 @@ object Dedup {
    * chain a-b-c). Returns (`id`, `comp`) for every vertex of the pair
    * graph, where `comp` is the MINIMUM id reachable from the vertex —
    * deterministic, and directly usable as the canonical survivor id.
-   * Ids are integral (kept in their type; mixed widths come back as
-   * bigint) or string (Spark's binary order); other types are rejected.
+   * Ids are integral or decimal(p <= 18, 0) (kept in their type; mixed
+   * types come back as bigint) or string (Spark's binary order); other
+   * types are rejected.
    * A pair with a null end adds no vertex; a self-loop (a, a) adds `a`.
    *
    * Algorithm: alternating large-star / small-star rounds (Kiveris et
@@ -628,7 +630,9 @@ object Dedup {
    * partition through `zipPartitions` against a vertex→min map, so a
    * hub's neighbour list is streamed, never held. The round output is
    * `localCheckpoint`ed by the action that tests it for stars. The
-   * returned frame is lazy: the per-vertex min over the last round.
+   * rounds run as one SQL execution of the pair frame, so its observed
+   * metrics (cap drops) are reported. The returned frame is lazy: the
+   * per-vertex min over the last round.
    */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
     connectedComponents(pairs, aCol, bCol, maxRounds = 64)
@@ -636,8 +640,7 @@ object Dedup {
   private[graft] def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                                          maxRounds: Int): DataFrame = {
     val (ta, tb) = (pairs.schema(aCol).dataType, pairs.schema(bCol).dataType)
-    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
-    if (integral(ta) && integral(tb)) {
+    if (longIds(ta) && longIds(tb)) {
       val idType = if (ta == tb) ta else LongType
       components[Long](pairs.select(col(aCol).cast(LongType), col(bCol).cast(LongType)),
           maxRounds, LongType)(_.getLong(_), identity)
@@ -647,9 +650,16 @@ object Dedup {
         implicit val binaryOrder: Ordering[UTF8String] = (x, y) => x.binaryCompare(y)
         components[UTF8String](pairs.select(col(aCol), col(bCol)), maxRounds, ta)(
           _.getUTF8String(_).clone(), _.toString)
-      case _ => throw new IllegalArgumentException("connectedComponents needs integral or " +
-        s"string ids, got $aCol: ${ta.simpleString}, $bCol: ${tb.simpleString}")
+      case _ => throw new IllegalArgumentException("connectedComponents needs integral, " +
+        s"decimal(p<=18,0) or string ids, got $aCol: ${ta.simpleString}, $bCol: ${tb.simpleString}")
     }
+  }
+
+  /** Id types that cast to bigint and back without merging two ids. */
+  private def longIds(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case d: DecimalType => d.scale == 0 && d.precision <= 18
+    case _ => false
   }
 
   /** The rounds over the two-column `ends` frame, each under its job
@@ -664,25 +674,30 @@ object Dedup {
     val adj = try {
       // planning the pair frame's RDD runs its AQE stage jobs
       sc.setJobDescription("graft:Dedup.connectedComponents.edges")
-      val edges = ends.queryExecution.toRdd.flatMap(r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) None else Some((get(r, 0), get(r, 1))))
-      val part = new HashPartitioner(math.max(1, edges.getNumPartitions))
-      var adj = adjacency(edges, part)
-      var round = 0
-      var converged = false
-      while (!converged) {
-        if (round == maxRounds) throw new IllegalStateException(
-          s"connectedComponents: large-star/small-star did not converge in $maxRounds rounds")
-        round += 1
-        sc.setJobDescription(s"graft:Dedup.connectedComponents.round$round")
-        val next = adjacency(smallStar(largeStar(adj), part), part).localCheckpoint()
-        // the action that materialises the round also tests it
-        converged = next.mapPartitions(it => Iterator.single(nonStarVertices(it)))
-          .reduce(_ + _) == 0L
-        if (round > 1) adj.unpersist(blocking = false)
-        adj = next
+      // a SQL execution around the pair read: its end event is what fills
+      // the pair plan's observed metrics (CapMetrics, dropStats)
+      val qe = ends.queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("connectedComponents")) {
+        val edges = qe.toRdd.flatMap(r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) None else Some((get(r, 0), get(r, 1))))
+        val part = new HashPartitioner(math.max(1, edges.getNumPartitions))
+        var adj = adjacency(edges, part)
+        var round = 0
+        var converged = false
+        while (!converged) {
+          if (round == maxRounds) throw new IllegalStateException(
+            s"connectedComponents: large-star/small-star did not converge in $maxRounds rounds")
+          round += 1
+          sc.setJobDescription(s"graft:Dedup.connectedComponents.round$round")
+          val next = adjacency(smallStar(largeStar(adj), part), part).localCheckpoint()
+          // the action that materialises the round also tests it
+          converged = next.mapPartitions(it => Iterator.single(nonStarVertices(it)))
+            .reduce(_ + _) == 0L
+          if (round > 1) adj.unpersist(blocking = false)
+          adj = next
+        }
+        adj
       }
-      adj
     } finally sc.setJobDescription(callerDesc)
     ends.sparkSession.createDataFrame(
       vertexMins(adj).map { case (u, r) => Row(out(u), out(r)) },
@@ -790,22 +805,25 @@ object Dedup {
    * NULL scores order LOWEST (struct-max puts null first): a member
    * with any non-null score always beats a null-scored one, and a
    * component whose members are ALL null-scored falls back to min-id
-   * survival — the [[collapseNearDups]] policy. Id domain: the argmax
-   * tie-break negates the id, so ids must sit in the negation-closed
-   * range of their type (a `Long.MinValue` id would overflow; real id
-   * spaces — non-negative counters, hashes into [0, 2^63) — are fine).
+   * survival — the [[collapseNearDups]] policy. Id domain: integral or
+   * decimal(p <= 18, 0) ids (others are rejected before any job runs);
+   * the argmax tie-break negates the id, so ids must sit in the
+   * negation-closed range of their type (a `Long.MinValue` id would
+   * overflow; real id spaces — non-negative counters, hashes into
+   * [0, 2^63) — are fine).
    */
   def collapseNearDupsBest(docs: DataFrame, idCol: String, scoreCol: String,
                            pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val comps = connectedComponents(pairs, aCol, bCol)
-      .select(col("id").as(idCol), col("comp"))
     // argmax(score, then min id) among present docs: max of a struct
     // ordered by (score asc, negated id asc) -> its id field is the
     // survivor. Negation needs a numeric id; cast-to-string ids would
-    // order lexicographically, so require numeric explicitly.
-    require(docs.schema(idCol).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"collapseNearDupsBest needs a numeric id column, got " +
+    // order lexicographically, so require one [[connectedComponents]]
+    // takes as bigint, before it runs.
+    require(longIds(docs.schema(idCol).dataType),
+      s"collapseNearDupsBest needs an integral or decimal(p<=18,0) id column, got " +
         docs.schema(idCol).dataType.simpleString)
+    val comps = connectedComponents(pairs, aCol, bCol)
+      .select(col("id").as(idCol), col("comp"))
     val survivors = comps
       .join(docs.select(col(idCol), col(scoreCol).as("__score")), Seq(idCol))
       .groupBy(col("comp"))

@@ -91,6 +91,32 @@ class CapMetricsSpec extends AnyFunSuite {
     }
   }
 
+  test("cap firings in pairs that feed a collapse are reported too") {
+    CapMetrics.install(spark)
+    withoutBroadcast {
+      // connectedComponents reads the pair plan itself, not through a
+      // Dataset action: the drop must still reach the engine hook, and
+      // a caller's Observation must still be filled
+      val hot = ((0L until 30L).map(i => (i, s"a b c d e u$i v$i w$i x$i y$i")) ++
+        Seq((9000L, "z1 z2 z3 z4 z5 z6 z7 z8"), (9001L, "z1 z2 z3 z4 z5 z6 z7 z8")))
+        .toDF("doc_id", "text")
+      settleDrain()
+      val kept = Dedup.collapseNearDups(hot, "doc_id", Dedup.ngramJaccardPairs(hot,
+        "doc_id", "text", n = 5, threshold = 0.5, dfCap = 10), "doc_a", "doc_b")
+      assert(kept.count() == 31L) // the z-docs collapse; the capped shingle links nothing
+      val fired = CapMetrics.awaitFired()
+      assert(fired.exists(f => f.metric.startsWith(CapMetrics.Prefix) &&
+        f.values.get("dropped_rows").exists(_ > 0L)),
+        s"collapse-path cap firing not reported: $fired")
+      CapMetrics.drainFired()
+      val obs = new org.apache.spark.sql.Observation("collapse_dropstats")
+      Dedup.collapseNearDups(hot, "doc_id", Dedup.ngramJaccardPairs(hot, "doc_id", "text",
+        n = 5, threshold = 0.5, dfCap = 10, dropStats = Some(obs)), "doc_a", "doc_b")
+      val got = org.apache.spark.sql.GraftColumnBridge.observationGetOrEmpty(obs)
+      assert(got.get("dropped_rows").exists(_.asInstanceOf[Long] > 0L), s"observed: $got")
+    }
+  }
+
   test("explicit Observation still wins over the engine hook (no double metric)") {
     CapMetrics.install(spark)
     withoutBroadcast {

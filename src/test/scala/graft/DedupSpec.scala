@@ -3,6 +3,7 @@ package graft
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class DedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -386,6 +387,10 @@ class DedupSpec extends AnyFunSuite {
     val bad = intercept[IllegalArgumentException](Dedup.connectedComponents(
       Seq((1.0, 2.0)).toDF("doc_a", "doc_b"), "doc_a", "doc_b"))
     assert(bad.getMessage.contains("double"))
+    val wide = intercept[IllegalArgumentException](Dedup.connectedComponents(
+      pairs.select(col("doc_a").cast("decimal(20,0)"), col("doc_b").cast("decimal(20,0)")),
+      "doc_a", "doc_b"))
+    assert(wide.getMessage.contains("decimal(20,0)"))
   }
 
   /** Every vertex's minimum reachable id, by in-memory union-find
@@ -449,23 +454,41 @@ class DedupSpec extends AnyFunSuite {
     // string ids: minimum by string order ("n192" < "n92"), not numeric
     val asString = bridged.map { case (a, b) => (s"n${200 - a}", s"n${200 - b}") }
     assert(ccMap[String](asString.toDF("doc_a", "doc_b")) == unionFind(asString))
+    // decimal(p <= 18, 0) ids, e.g. NUMBER(12) keys, go through bigint and back
+    val asDecimal = bridged.toDF("doc_a", "doc_b")
+      .select(col("doc_a").cast("decimal(12,0)"), col("doc_b").cast("decimal(12,0)"))
+    assert(ccMap[java.math.BigDecimal](asDecimal).map { case (k, v) =>
+      k.longValueExact -> v.longValueExact } == unionFind(bridged))
   }
 
   test("connectedComponents runs one named Spark job per round") {
     val sc = spark.sparkContext
     val group = "graft-cc-job-count"
+    val described = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          described.add(e.properties.getProperty("spark.job.description"))
+    }
+    sc.addSparkListener(listener)
     sc.setJobGroup(group, "caller", interruptOnCancel = false)
     sc.setJobDescription("caller's description")
     try {
       // a 6-vertex path is not yet a star forest after rounds 1 and 2
       val path = (0L until 5L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
       val comps = Dedup.connectedComponents(path, "doc_a", "doc_b")
-      val described = org.apache.spark.JobLog.descriptions(sc, group)
+        // job events reach listeners asynchronously: wait for both views
+      val deadline = System.nanoTime() + 10000000000L
+      while ((described.size < 3 || sc.statusTracker.getJobIdsForGroup(group).length < 3) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(200) // a fourth job would show up by now
       assert(sc.statusTracker.getJobIdsForGroup(group).length == 3)
-      assert(described == (1 to 3).map(n => s"graft:Dedup.connectedComponents.round$n"))
+      assert(described.asScala.toSeq ==
+        (1 to 3).map(n => s"graft:Dedup.connectedComponents.round$n"))
       assert(sc.getLocalProperty("spark.job.description") == "caller's description")
       assert(comps.collect().map(_.getLong(1)).toSet == Set(0L))
     } finally {
+      sc.removeSparkListener(listener)
       sc.clearJobGroup()
       sc.setJobDescription(null)
     }
@@ -689,10 +712,13 @@ class DedupSpec extends AnyFunSuite {
       "doc_id", "score", pairs, "doc_a", "doc_b")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(filtered == Set(3L, 4L))
-    // string ids are rejected loudly (negation would mis-order)
-    val strDocs = Seq(("a", 1L)).toDF("doc_id", "score")
-    assertThrows[IllegalArgumentException] {
-      Dedup.collapseNearDupsBest(strDocs, "doc_id", "score", pairs, "doc_a", "doc_b")
+    // string ids are rejected loudly (negation would mis-order), and so
+    // are fractional ids, which connectedComponents would not accept
+    for (id <- Seq(lit("a"), lit(1.5))) {
+      val odd = Seq(1L).toDF("score").select(id.as("doc_id"), col("score"))
+      assertThrows[IllegalArgumentException] {
+        Dedup.collapseNearDupsBest(odd, "doc_id", "score", pairs, "doc_a", "doc_b")
+      }
     }
   }
 
