@@ -2487,7 +2487,8 @@ object ExtensionQueries {
         Seq("lang"), ByteBpeFixtureMerges))),
 
     // the PIECES surface: ordered hex-byte subword symbols per doc —
-    // one dictionary lookup away from model input ids. GRADED as
+    // one dictionary lookup away from model input ids, encoded by the
+    // native ByteBpeEncode kernel like every byte-BPE surface. GRADED as
     // posexploded (doc_id, pos, piece) scalar rows: the driver's
     // canonicalizer sorts with pandas sort_values, which crashes on
     // array-typed cells (SURVEY §7.5 #12) — the array-returning Scala
@@ -2520,12 +2521,10 @@ object ExtensionQueries {
         .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
           col("token_id")))),
 
-    // the NATIVE kernel path (graft.functions.ByteBpeEncode) over the
-    // SAME fixture merges, graded against the SAME oracle text as
-    // q_text_bpe_bytes_pieces — a second implementation of the encode
-    // (greedy-by-rank reference-object kernel vs literal-replace
-    // chain) pinned to one oracle, the established extra-execution-path
-    // convention
+    // the NATIVE kernel (graft.functions.ByteBpeEncode) called
+    // directly over the SAME fixture merges, graded against the SAME
+    // oracle text as q_text_bpe_bytes_pieces; the two rows run the same
+    // plan, and this one pins the kernel's own column API to the oracle
     "q_text_bpe_kernel_pieces" -> ((s, dir) =>
       det(docs(s, dir).select(col("doc_id"),
         graft.functions.ByteBpeEncode.byteBpePieces(col("text"),
@@ -4257,8 +4256,9 @@ object ExtensionQueries {
        |      chr(2) || chr(1))))""".stripMargin
   }
   /** The full pieces oracle — shared verbatim by
-    * q_text_bpe_bytes_pieces (replace-chain path) and
-    * q_text_bpe_kernel_pieces (native kernel path). */
+    * q_text_bpe_bytes_pieces (the public `encodeBpeBytes` surface) and
+    * q_text_bpe_kernel_pieces (the kernel's column API); both run the
+    * native kernel, and this replace-chain replay grades it. */
   private lazy val BytePiecesOracleSql: String =
     s"""WITH t AS (SELECT doc_id, $BytePiecesSql AS subwords
        |  FROM documents)
@@ -7288,8 +7288,9 @@ object ExtensionQueries {
          |  AS t(merge_rank, lhs, rhs, n_occurrences)
          |ORDER BY merge_rank $N1, lhs $N1, rhs $N1, n_occurrences $N1""".stripMargin,
     // byte-level encode replay: byte symbols re-derived from
-    // hex(encode(tok)) digit pairs, the SAME sentinel wrapping and
-    // generated replace chain as the engine's codegen'd projection
+    // hex(encode(tok)) digit pairs, sentinel-wrapped, and a replace
+    // chain generated from the engine's merge list — the training-order
+    // semantics the engine's greedy-by-rank kernel must reproduce
     "q_text_bpe_bytes_encode" -> {
       val base = "regexp_replace(hex(encode(tok)), '(..)', " +
         "chr(1) || '\\1' || chr(2), 'g')"
@@ -7315,9 +7316,8 @@ object ExtensionQueries {
     // then unnested to (doc_id, pos, piece) scalar rows (zipped
     // generate_subscripts/unnest = Spark posexplode; 0-based pos)
     "q_text_bpe_bytes_pieces" -> BytePiecesOracleSql,
-    // the native kernel path grades against the IDENTICAL oracle text —
-    // one oracle, two implementations (replace chain / greedy-by-rank
-    // kernel): any semantic drift between them is a hash mismatch here
+    // the kernel's column API grades against the IDENTICAL oracle text —
+    // one oracle, two entry points to the greedy-by-rank kernel
     "q_text_bpe_kernel_pieces" -> BytePiecesOracleSql,
     // FIM replay: every hash draw recomputed (md5-uniform convention;
     // the uniform is mantissa-exact, ::DOUBLE keeps the cut arithmetic

@@ -8,41 +8,46 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native byte-level (GPT-2-style) BPE ENCODE kernel — the
- * production-merge-list path that the literal-`replace` chain in
- * [[graft.operators.TextStats]] cannot take: the chain compiles to
- * O(merges) expression nodes, each rescanning the token, so a real
- * ~50k-merge GPT-2-class vocabulary blows whole-stage codegen's
- * method-size limits and degrades to interpreted O(merges × len) per
- * token. This expression is ONE node regardless of merge count: the
- * merge table compiles once (driver-side) into an id-space pair-rank
- * map that rides the generated code as a REFERENCE OBJECT
- * (`ctx.addReferenceObj`, the [[UnigramSegment]] pattern), and each
- * token is encoded by the canonical greedy-by-rank loop with a
- * bounded per-model token cache (Zipf makes the hit rate enormous).
+ * Native byte-level (GPT-2-style) BPE ENCODE kernel — THE encode path
+ * behind every byte-BPE surface ([[graft.operators.TextStats]]'s
+ * `encodeBpeBytes`, `encodeBpeBytesIds`, `applyBpeBytes`,
+ * `byteBpeFertility` and `tokenOffsets`, and the SFT chat encoders),
+ * at every merge count. A chain of literal `replace` calls would
+ * compile to O(merges) expression nodes, each rescanning the token,
+ * so a real ~50k-merge GPT-2-class vocabulary would blow whole-stage
+ * codegen's method-size limits, and even an 8-merge fixture list runs
+ * several times slower than this node. This expression is ONE node
+ * regardless of merge count: the merge table compiles once
+ * (driver-side) into an id-space pair-rank map that rides the
+ * generated code as a REFERENCE OBJECT (`ctx.addReferenceObj`, the
+ * [[UnigramSegment]] pattern), and each token is encoded by the
+ * canonical greedy-by-rank loop with a bounded per-model token cache
+ * (Zipf makes the hit rate enormous).
  *
- * Semantics — identical to the replace chain for WELL-FORMED merge
- * lists (every operand is a base byte or the result of a strictly
- * earlier merge, which is what BPE training produces): the chain
- * applies merges exhaustively in training order; greedy-by-rank
- * applies the lowest-rank pair present, repeatedly. Merging two
- * symbols can only create NEW adjacencies involving the merged
- * symbol, whose merges are all of strictly later rank, so the rank
- * sequence the greedy loop applies is non-decreasing — i.e. exactly
- * the chain's order. (Spec-pinned row-identical to
- * `TextStats.encodeBpeBytes` on fixture and trained lists.) Ill-formed
- * lists (an operand no earlier merge can produce) match too: such a
- * pair can never occur as adjacent SYMBOLS, and the chain's `replace`
- * never fires on it — the compiler simply drops it from the pair map.
+ * Semantics — identical to applying the merges exhaustively in
+ * training order (the literal-replace chain the DuckDB oracles replay,
+ * and the reference encoder ByteBpeEncodeSpec compares against) for
+ * WELL-FORMED merge lists (every operand is a base byte or the result
+ * of a strictly earlier merge, which is what BPE training produces):
+ * greedy-by-rank applies the lowest-rank pair present, repeatedly.
+ * Merging two symbols can only create NEW adjacencies involving the
+ * merged symbol, whose merges are all of strictly later rank, so the
+ * rank sequence the greedy loop applies is non-decreasing — i.e.
+ * exactly training order. Ill-formed lists (an operand no earlier
+ * merge can produce) match too: such a pair can never occur as
+ * adjacent SYMBOLS, and a `replace` never fires on it — the compiler
+ * simply drops it from the pair map.
  *
  * Output ids follow [[graft.operators.TextStats.bpeBytesVocab]]'s
- * convention (byte b → b, merge rank k → 256+k); duplicate result
- * pieces across merges are rejected loudly (the vocab's piece→id map
- * would be ambiguous). Distinct merge paths CAN legitimately produce
- * one surface piece in real training — (b,c) wins in some words,
- * (a,b) in others, then (a,'bc') and ('ab',c) both win later ranks,
- * yielding 'abc' twice — so graft's trainers skip such winners at the
- * producer ([[graft.operators.TextStats.trainBpeBytesLocal]] and the
+ * convention (byte b → b, merge rank k → 256+k). A merge list with a
+ * duplicate result piece is rejected with an IllegalArgumentException
+ * on EVERY surface and at every merge count — pieces, counts and
+ * fertility as well as ids (the vocab's piece→id map would be
+ * ambiguous). Distinct merge paths CAN legitimately produce one
+ * surface piece in real training — (b,c) wins in some words, (a,b) in
+ * others, then (a,'bc') and ('ab',c) both win later ranks, yielding
+ * 'abc' twice — so graft's trainers skip such winners at the producer
+ * ([[graft.operators.TextStats.trainBpeBytesLocal]] and the
  * distributed twin, ADVICE r16 #2); the require here guards
  * third-party merge lists.
  *

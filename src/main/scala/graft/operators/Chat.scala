@@ -549,9 +549,9 @@ object Chat {
    * ([[sftPackedTokenIds]]' cell stream before packing): one row per
    * conversation, (idCol, token_ids, loss_mask, n_tokens,
    * n_assistant_tokens). ROW-LOCAL (zero shuffle), hence
-   * streaming-legal — the in-stream SFT intake tokenizes and masks
-   * per micro-batch ([[graft.streaming.StreamingOps]] twin) and the
-   * batch compaction pass packs. NULL conversations pass through as
+   * streaming-legal — the in-stream SFT intake runs this operator on
+   * the stream to tokenize and mask per micro-batch, and the batch
+   * compaction pass packs. NULL conversations pass through as
    * NULL arrays (the chat family's NULL contract); the closing EOS
    * cell (mask 0) is included, so n_tokens counts it.
    */

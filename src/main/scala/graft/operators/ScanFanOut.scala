@@ -31,11 +31,11 @@ import scala.util.control.NonFatal
  * whenever the scan is under-parallelized at all.
  *
  * SCALE-ADAPTIVE, not a local-mode tune: the fan-out fires only when
- * the optimizer's size estimate for the input is BELOW a threshold
- * (default 256 MB, env-overridable via SPARK_GRAFT_FANOUT_MAX_BYTES).
- * At production scale a 100 TB corpus estimates far above it and the
- * operator is a no-op (zero plan change); unknown estimates default
- * to Long.MaxValue sizeInBytes and likewise skip. Correctness: the
+ * the optimizer's size estimate for the input is at most
+ * [[ScanFanOut.MaxBytes]] (256 MB). At production scale a 100 TB
+ * corpus estimates far above it and the operator is a no-op (zero
+ * plan change); unknown estimates default to Long.MaxValue
+ * sizeInBytes and likewise skip. Correctness: the
  * repartition only permutes rows of row-local / key-keyed operators
  * whose outputs are order-insensitive (pack geometry keys on doc_id,
  * window assembly array_sorts, aggregates commute), and Spark's
@@ -43,16 +43,8 @@ import scala.util.control.NonFatal
  * task retry (SPARK-23207).
  */
 object ScanFanOut {
-  private[graft] def maxBytes: Long =
-    parseMaxBytes(sys.env.get("SPARK_GRAFT_FANOUT_MAX_BYTES"))
-
-  /** The threshold from the env value: 256 MB when unset; anything but
-    * a non-negative byte count fails, naming the variable. */
-  private[graft] def parseMaxBytes(raw: Option[String]): Long =
-    raw.fold(256L * 1024 * 1024) { s =>
-      s.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_FANOUT_MAX_BYTES must be a non-negative byte count, got '$s'"))
-    }
+  /** The largest estimated input size that still fans out. */
+  private[graft] val MaxBytes: Long = 256L * 1024 * 1024
 
   /** An optimizer size estimate; a non-fatal failure to estimate reads
     * as unknown (Long.MaxValue, so the fan-out skips), fatal errors and
@@ -80,7 +72,7 @@ object ScanFanOut {
       // unknown sizes surface as defaultSizeInBytes = Long.MaxValue
       // and skip the fan-out — the safe failure mode.
       val est = sizeEstimate(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-      if (!fanned && est <= BigInt(maxBytes)) df.repartition(cores) else df
+      if (!fanned && est <= BigInt(MaxBytes)) df.repartition(cores) else df
     }
   }
 }

@@ -723,9 +723,8 @@ object TextStats {
    * over [[graft.functions.ByteBpeDecode]] (one codegen'd call per
    * row into the shared compiled model; `skipUnknown` drops
    * out-of-vocabulary EOS/pad sentinels, the artifact-reading
-   * contract). Row-local and zero-shuffle, so the streaming twin
-   * ([[graft.streaming.StreamingOps.streamingDetokenize]]) is this
-   * operator as-is under the frozen-tokenizer contract.
+   * contract). Row-local and zero-shuffle, so it runs on a streaming
+   * frame as-is under the frozen-tokenizer contract.
    * Output: (idCol, text).
    */
   def detokenize(df: DataFrame, idCol: String, idsCol: String,
@@ -1083,9 +1082,9 @@ object TextStats {
    * is O(merges) expression nodes, fine at the gradeable fixture scale
    * this CHAR-level surface exists for; production-size merge lists
    * belong on the BYTE-level family ([[applyBpeBytes]] and friends),
-   * which auto-delegates to the [[graft.functions.ByteBpeEncode]]
-   * kernel above [[ReplaceChainMaxMerges]] — byte level is also what
-   * production LLM tokenizers actually run.
+   * which runs the [[graft.functions.ByteBpeEncode]] kernel at every
+   * merge count — byte level is also what production LLM tokenizers
+   * actually run.
    *
    * Output: (doc_id, n_tokens, n_subwords).
    */
@@ -1128,18 +1127,6 @@ object TextStats {
   val ByteBpePretokenPattern: String =
     graft.functions.ByteBpeEncode.PretokenPattern
 
-  /** Above this merge-list size the byte-BPE encode surfaces delegate
-    * to the native [[graft.functions.ByteBpeEncode]] kernel instead of
-    * the literal-`replace` chain: the chain is O(merges) expression
-    * nodes each rescanning the token, so a production-size list
-    * (GPT-2-class ~50k merges) blows whole-stage codegen's method
-    * limits and degrades to interpreted O(merges × len) per token,
-    * while the kernel is ONE codegen'd node at any merge count
-    * (spec-pinned row-identical on fixture and trained lists). The
-    * chain stays the default at fixture scale because it is the
-    * textually-generatable form the DuckDB oracles replay. */
-  val ReplaceChainMaxMerges: Int = 64
-
   /** GPT-2-style pre-tokens of `text` (see [[ByteBpePretokenPattern]]).
     * Unlike `\S+` tokens, pre-tokens KEEP leading spaces and whitespace
     * runs, so the byte stream is lossless. */
@@ -1149,34 +1136,13 @@ object TextStats {
   /** A pre-token as sentinel-wrapped BYTE symbols: its UTF-8 bytes as
     * uppercase hex pairs, each wrapped `U+0001 hh U+0002` — the same
     * paired-sentinel representation [[trainBpe]] uses for characters,
-    * so the identical literal-replace merge machinery applies. Hex
+    * so [[trainBpeBytes]] runs the same literal-replace merge loop. Hex
     * pairs (not raw bytes) keep every symbol printable, engine-neutral
     * (DuckDB's `hex(encode(tok))` produces the same text), and safe
     * from sentinel collisions; ONE regexp pass inserts all sentinels
     * (no per-index lambda re-evaluating `hex(encode(...))`). */
   private def byteSymbolString(tok: Column): Column =
     regexp_replace(hex(encode(tok, "UTF-8")), "(..)", "\u0001$1\u0002")
-
-  /** Row-local byte-level subword count of `text` under `merges` —
-    * the shared projection behind [[applyBpeBytes]] and
-    * [[byteBpeFertility]]: fold the literal-replace merge chain over
-    * each pre-token's byte-symbol string, count open sentinels. */
-  private def byteSubwordCount(text: Column,
-                               merges: Seq[(String, String)]): Column = {
-    if (merges.size > ReplaceChainMaxMerges)
-      return graft.functions.ByteBpeEncode.byteBpeCount(text, merges)
-    val OPEN = "\u0001"
-    val CLOSE = "\u0002"
-    val perTok = transform(bytePretokens(text), tok => {
-      val folded = merges.foldLeft(byteSymbolString(tok)) {
-        case (s, (l, r)) =>
-          replace(s, lit(OPEN + l + CLOSE + OPEN + r + CLOSE),
-            lit(OPEN + l + r + CLOSE))
-      }
-      (length(folded) - length(translate(folded, OPEN, ""))).cast(LongType)
-    })
-    aggregate(perTok, lit(0L), (a, x) => a + x)
-  }
 
   /**
    * BYTE-LEVEL BPE training (the GPT-2 tokenizer recipe): the corpus
@@ -1364,15 +1330,17 @@ object TextStats {
    * Byte-level BPE ENCODE under a fixed merge list ([[trainBpeBytes]]
    * hex symbols): per-document pre-token and subword counts — the
    * token-cost column under the PRODUCTION segmentation. Entirely
-   * row-local (merge list compiles to a codegen'd literal-replace
-   * chain; zero shuffle). Output: (doc_id, n_pretokens, n_subwords).
+   * row-local: the subword count is the native
+   * [[graft.functions.ByteBpeEncode]] kernel's count mode at any merge
+   * count, zero shuffle. Output: (doc_id, n_pretokens, n_subwords).
    */
   def applyBpeBytes(docs: DataFrame, idCol: String, textCol: String,
                     merges: Seq[(String, String)]): DataFrame = {
     require(merges.nonEmpty, "merges must be non-empty")
     docs.select(col(idCol).as("doc_id"),
       size(bytePretokens(col(textCol))).cast(LongType).as("n_pretokens"),
-      byteSubwordCount(col(textCol), merges).as("n_subwords"))
+      graft.functions.ByteBpeEncode.byteBpeCount(col(textCol), merges)
+        .as("n_subwords"))
   }
 
   /**
@@ -1380,28 +1348,16 @@ object TextStats {
    * token-ids-ready surface ([[applyBpeBytes]] is the counting twin):
    * per document, the ordered hex-byte-symbol pieces across all
    * pre-tokens ("746865" = the). A piece-to-id dictionary lookup away
-   * from model input. Row-local, zero shuffle.
+   * from model input. The native [[graft.functions.ByteBpeEncode]]
+   * kernel's pieces mode at any merge count; row-local, zero shuffle.
    * Output: (doc_id, subwords array<string>); NULL text → NULL.
    */
   def encodeBpeBytes(docs: DataFrame, idCol: String, textCol: String,
                      merges: Seq[(String, String)]): DataFrame = {
     require(merges.nonEmpty, "merges must be non-empty")
-    if (merges.size > ReplaceChainMaxMerges)
-      return docs.select(col(idCol).as("doc_id"),
-        graft.functions.ByteBpeEncode.byteBpePieces(col(textCol), merges)
-          .as("subwords"))
-    val OPEN = "\u0001"
-    val CLOSE = "\u0002"
-    val perTok = transform(bytePretokens(col(textCol)), tok => {
-      val folded = merges.foldLeft(byteSymbolString(tok)) {
-        case (s, (l, r)) =>
-          replace(s, lit(OPEN + l + CLOSE + OPEN + r + CLOSE),
-            lit(OPEN + l + r + CLOSE))
-      }
-      // strip the outer sentinels, split on the close+open seams
-      split(folded.substr(lit(2), length(folded) - 2), CLOSE + OPEN)
-    })
-    docs.select(col(idCol).as("doc_id"), flatten(perTok).as("subwords"))
+    docs.select(col(idCol).as("doc_id"),
+      graft.functions.ByteBpeEncode.byteBpePieces(col(textCol), merges)
+        .as("subwords"))
   }
 
   /**
@@ -1432,9 +1388,8 @@ object TextStats {
    * plan-literal map — and Catalyst's `element_at` on a literal map
    * is a LINEAR key scan per call, which priced the graded sf0.1 row
    * at 5.5 s vs 2.5 s for the pieces twin (≈370M string compares
-   * across 1.4M tokens × 264 keys). Kernel-vs-chain row identity is
-   * spec-pinned (ByteBpeEncodeSpec), and the ids surface stays graded
-   * against the same DuckDB replay. Row-local, zero shuffle.
+   * across 1.4M tokens × 264 keys). The ids surface stays graded
+   * against the DuckDB replace-chain replay. Row-local, zero shuffle.
    * Output: (doc_id, token_ids array<long>).
    */
   def encodeBpeBytesIds(docs: DataFrame, idCol: String, textCol: String,
@@ -1450,8 +1405,10 @@ object TextStats {
    * [[fertilityStats]] re-run the GPT-2-style tokenizer deserves:
    * per stratum, documents, `\S+` words, byte-level subwords under
    * `merges`, raw bytes, subwords-per-word fertility and
-   * bytes-per-subword compression. One aggregate over row-local
-   * columns — no shuffle beyond the stratum groupBy.
+   * bytes-per-subword compression. The subwords are the native
+   * [[graft.functions.ByteBpeEncode]] kernel's count, as in
+   * [[applyBpeBytes]]. One aggregate over row-local columns — no
+   * shuffle beyond the stratum groupBy.
    */
   def byteBpeFertility(docs: DataFrame, textCol: String,
                        strataCols: Seq[String],
@@ -1461,7 +1418,8 @@ object TextStats {
       .select((strataCols.map(col) ++ Seq(
         octet_length(col(textCol)).cast(LongType).as("__bytes"),
         graft.functions.TextFunctions.tokenCount(col(textCol)).as("__words"),
-        byteSubwordCount(col(textCol), merges).as("__subwords"))): _*)
+        graft.functions.ByteBpeEncode.byteBpeCount(col(textCol), merges)
+          .as("__subwords"))): _*)
       .groupBy(strataCols.map(col): _*)
       .agg(count(lit(1)).as("n_docs"),
         sum(col("__words")).as("total_words"),

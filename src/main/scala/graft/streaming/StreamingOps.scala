@@ -1012,114 +1012,6 @@ object StreamingOps {
         col("__t").as("n_docs"), round(psi, 6).as("psi"))
   }
 
-  /** [[graft.operators.TextStats.applyBpe]] on a stream: the merge
-    * chain is row-local (a codegen'd literal replace chain), so the
-    * batch operator IS streaming-safe — this wrapper exists for
-    * discoverability and pins the contract with a spec. */
-  def streamingApplyBpe(docs: DataFrame, idCol: String, textCol: String,
-                        merges: Seq[(String, String)]): DataFrame =
-    graft.operators.TextStats.applyBpe(docs, idCol, textCol, merges)
-
-  /** BYTE-level BPE pieces on a stream
-    * ([[graft.operators.TextStats.encodeBpeBytes]]): row-local at any
-    * merge-list size — the literal replace chain at fixture scale,
-    * the [[graft.functions.ByteBpeEncode]] reference-object kernel
-    * above the delegation threshold — so the batch operator is
-    * streaming-safe as-is (frozen-tokenizer contract: train offline,
-    * restart to re-tokenize). */
-  def streamingEncodeBpeBytes(docs: DataFrame, idCol: String,
-                              textCol: String,
-                              merges: Seq[(String, String)]): DataFrame =
-    graft.operators.TextStats.encodeBpeBytes(docs, idCol, textCol, merges)
-
-  /** BYTE-level BPE token IDS on a stream
-    * ([[graft.operators.TextStats.encodeBpeBytesIds]]) — the SFT
-    * intake path's tokenize step, running in-stream under the same
-    * frozen-tokenizer contract as [[streamingEncodeBpeBytes]]. */
-  def streamingEncodeBpeBytesIds(docs: DataFrame, idCol: String,
-                                 textCol: String,
-                                 merges: Seq[(String, String)]): DataFrame =
-    graft.operators.TextStats.encodeBpeBytesIds(docs, idCol, textCol, merges)
-
-  /** SFT tokenize-and-mask on a CONVERSATION stream
-    * ([[graft.operators.Chat.sftTokenizeMask]]): per-turn template
-    * encode + assistant loss mask + closing EOS — row-local, so the
-    * in-stream SFT intake emits model-ready (ids, mask) rows per
-    * micro-batch under the frozen-tokenizer contract; the PACKED
-    * artifacts ([[graft.operators.Chat.sftPackedTokenIds]] /
-    * `NoSplit`) are the batch compaction pass (packing needs global
-    * offsets — the CurationCompiler streaming rejection class). */
-  def streamingSftTokenizeMask(convs: DataFrame, idCol: String,
-                               convCol: String,
-                               merges: Seq[(String, String)],
-                               eosId: Option[Long] = None): DataFrame =
-    graft.operators.Chat.sftTokenizeMask(convs, idCol, convCol, merges, eosId)
-
-  /** DETOKENIZE on a stream
-    * ([[graft.operators.TextStats.detokenize]]): the decode kernel is
-    * row-local with the piece table frozen as a codegen reference
-    * object, so token-id streams (model outputs, packed-artifact
-    * readers) decode in-stream under the same frozen-tokenizer
-    * contract as [[streamingEncodeBpeBytesIds]]. */
-  def streamingDetokenize(frames: DataFrame, idCol: String, idsCol: String,
-                          merges: Seq[(String, String)],
-                          skipUnknown: Boolean = false): DataFrame =
-    graft.operators.TextStats.detokenize(frames, idCol, idsCol, merges,
-      skipUnknown)
-
-  /** Token→byte alignment on a stream
-    * ([[graft.operators.TextStats.tokenOffsets]]): the offsets mode
-    * is row-local like the ids mode, so span alignment (redaction
-    * windows, label projection) runs in-stream as-is. */
-  def streamingTokenOffsets(docs: DataFrame, idCol: String, textCol: String,
-                            merges: Seq[(String, String)]): DataFrame =
-    graft.operators.TextStats.tokenOffsets(docs, idCol, textCol, merges)
-
-  /** FIM infilling on a stream
-    * ([[graft.operators.TextStats.fimTransform]]): participation,
-    * cut points and PSM/SPM mode are all md5-hash draws off the doc
-    * id — row-local, deterministic, replayable — so the augmentation
-    * runs in-stream with exactly the batch semantics (a retried
-    * micro-batch re-derives identical rows). */
-  def streamingFimTransform(docs: DataFrame, idCol: String,
-                            textCol: String, fimRate: Double = 0.5,
-                            spmRate: Double = 0.5): DataFrame =
-    graft.operators.TextStats.fimTransform(docs, idCol, textCol,
-      fimRate, spmRate)
-
-  /** T5 span corruption on a stream
-    * ([[graft.operators.TextStats.spanCorrupt]]): span count,
-    * lengths and offsets are per-(doc, segment) md5-hash replays —
-    * row-local and deterministic, so the denoising pre-training pair
-    * construction runs in-stream like [[streamingFimTransform]]. */
-  def streamingSpanCorrupt(docs: DataFrame, idCol: String, textCol: String,
-                           noiseDensity: Double = 0.15,
-                           meanSpan: Int = 3): DataFrame =
-    graft.operators.TextStats.spanCorrupt(docs, idCol, textCol,
-      noiseDensity, meanSpan)
-
-  /** UL2 mixture of denoisers on a stream
-    * ([[graft.operators.TextStats.denoiserMix]]): routing, spans and
-    * the prefix cut are all per-doc hash replays — row-local,
-    * deterministic, micro-batch-retry-safe like
-    * [[streamingSpanCorrupt]]. */
-  def streamingDenoiserMix(docs: DataFrame, idCol: String, textCol: String,
-                           rDensity: Double = 0.15, rMeanSpan: Int = 3,
-                           xDensity: Double = 0.5, xMeanSpan: Int = 8): DataFrame =
-    graft.operators.TextStats.denoiserMix(docs, idCol, textCol,
-      rDensity, rMeanSpan, xDensity, xMeanSpan)
-
-  /** [[graft.operators.TextStats.applyUnigramLm]] on a stream: the
-    * Viterbi kernel is row-local with the piece table frozen as a
-    * codegen reference object (train offline, restart to re-tokenize —
-    * the frozen-model contract), so the batch operator is
-    * streaming-safe as-is. */
-  def streamingApplyUnigramLm(docs: DataFrame, idCol: String, textCol: String,
-                              pieces: Seq[(String, Double)],
-                              unkLogProb: Double = -12.0): DataFrame =
-    graft.operators.TextStats.applyUnigramLm(docs, idCol, textCol,
-      pieces, unkLogProb)
-
   /** Apply a table migration config to a STREAMING source frame: the same
     * compiled plan (rename/transform/validate/lookup), incremental
     * execution. `resolve` supplies STATIC lookup dims (stream-static

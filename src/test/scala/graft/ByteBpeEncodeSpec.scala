@@ -2,16 +2,20 @@ package graft
 
 import graft.functions.ByteBpeEncode
 import graft.operators.TextStats
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * The native byte-BPE encode kernel (one expression node at any merge
- * count) against the literal-replace chain (the DuckDB-replayable
- * fixture path): row-identical pieces/ids/counts on planted edges and
- * real corpus, greedy-by-rank semantics pinned where rank order and
- * scan order disagree, and the driver-side incremental trainer
- * identical to the distributed per-merge-aggregate trainer.
+ * count, the only encode path of the public byte-BPE surfaces) against
+ * a reference encoder kept here: the literal-replace chain that the
+ * DuckDB oracles replay. Row-identical pieces/ids/counts on planted
+ * edges and real corpus, greedy-by-rank semantics pinned where rank
+ * order and scan order disagree, one merge-list rule on every surface,
+ * and the driver-side incremental trainer identical to the distributed
+ * per-merge-aggregate trainer.
  */
 class ByteBpeEncodeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -36,18 +40,57 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
     df.collect().map(r =>
       r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[String](1))).toMap
 
+  // ---- reference encoder: the literal-replace chain, applying the
+  // merges exhaustively in training order over each pre-token's
+  // sentinel-wrapped hex byte symbols (the DuckDB oracles' replay)
+
+  private def byteSymbolString(tok: Column): Column =
+    regexp_replace(hex(encode(tok, "UTF-8")), "(..)", "\u0001$1\u0002")
+
+  /** Reference pieces: (doc_id, subwords), NULL text → NULL. */
+  private def chainPieces(docs: DataFrame, idCol: String, textCol: String,
+                          merges: Seq[(String, String)]): DataFrame = {
+    val OPEN = "\u0001"
+    val CLOSE = "\u0002"
+    val perTok = transform(TextStats.bytePretokens(col(textCol)), tok => {
+      val folded = merges.foldLeft(byteSymbolString(tok)) {
+        case (s, (l, r)) =>
+          replace(s, lit(OPEN + l + CLOSE + OPEN + r + CLOSE),
+            lit(OPEN + l + r + CLOSE))
+      }
+      // strip the outer sentinels, split on the close+open seams
+      split(folded.substr(lit(2), length(folded) - 2), CLOSE + OPEN)
+    })
+    docs.select(col(idCol).as("doc_id"), flatten(perTok).as("subwords"))
+  }
+
+  /** Reference subword count of `text`: count open sentinels. */
+  private def chainCount(text: Column, merges: Seq[(String, String)]): Column = {
+    val OPEN = "\u0001"
+    val CLOSE = "\u0002"
+    val perTok = transform(TextStats.bytePretokens(text), tok => {
+      val folded = merges.foldLeft(byteSymbolString(tok)) {
+        case (s, (l, r)) =>
+          replace(s, lit(OPEN + l + CLOSE + OPEN + r + CLOSE),
+            lit(OPEN + l + r + CLOSE))
+      }
+      (length(folded) - length(translate(folded, OPEN, ""))).cast(LongType)
+    })
+    aggregate(perTok, lit(0L), (a, x) => a + x)
+  }
+
   test("kernel pieces == replace chain on fixture merges: edges + sf0.001 corpus") {
-    val chain = piecesOf(
-      TextStats.encodeBpeBytes(edgeDocs, "doc_id", "text", FixtureMerges))
+    val chain = piecesOf(chainPieces(edgeDocs, "doc_id", "text", FixtureMerges))
     val kernel = piecesOf(edgeDocs.select(col("doc_id"),
       ByteBpeEncode.byteBpePieces(col("text"), FixtureMerges).as("subwords")))
     assert(kernel == chain, "kernel must replicate the chain on every edge doc")
+    assert(piecesOf(TextStats.encodeBpeBytes(edgeDocs, "doc_id", "text",
+      FixtureMerges)) == chain, "the public surface is the kernel")
     assert(kernel(3L) == null, "NULL text -> NULL")
     assert(kernel(2L) == Seq.empty, "empty text -> empty pieces")
 
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val chainC = piecesOf(
-      TextStats.encodeBpeBytes(d, "doc_id", "text", FixtureMerges))
+    val chainC = piecesOf(chainPieces(d, "doc_id", "text", FixtureMerges))
     val kernelC = piecesOf(d.select(col("doc_id"),
       ByteBpeEncode.byteBpePieces(col("text"), FixtureMerges).as("subwords")))
     assert(kernelC == chainC, "kernel must replicate the chain on the corpus")
@@ -64,7 +107,7 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
         FixtureMerges.zipWithIndex.map { case ((l, r), i) =>
           (l + r) -> (256L + i) }).toMap
     val m = typedlit(vocab)
-    val mapIds = TextStats.encodeBpeBytes(d, "doc_id", "text", FixtureMerges)
+    val mapIds = chainPieces(d, "doc_id", "text", FixtureMerges)
       .select(col("doc_id"),
         transform(col("subwords"), p => element_at(m, p)).as("token_ids"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -72,8 +115,8 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
       ByteBpeEncode.byteBpeIds(col("text"), FixtureMerges).as("token_ids"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(kIds == mapIds, "kernel ids must equal the plan-literal-map ids")
-    val chainN = TextStats.applyBpeBytes(d, "doc_id", "text", FixtureMerges)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val chainN = d.select(col("doc_id"), chainCount(col("text"), FixtureMerges))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val kN = d.select(col("doc_id"),
       ByteBpeEncode.byteBpeCount(col("text"), FixtureMerges).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -127,8 +170,7 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
     val doc = Seq((1L, "ABC")).toDF("doc_id", "text")
     val kernel = piecesOf(doc.select(col("doc_id"),
       ByteBpeEncode.byteBpePieces(col("text"), merges).as("p")))(1L)
-    val chain = piecesOf(
-      TextStats.encodeBpeBytes(doc, "doc_id", "text", merges))(1L)
+    val chain = piecesOf(chainPieces(doc, "doc_id", "text", merges))(1L)
     assert(kernel == Seq("41", "4243") && chain == kernel)
     // unreachable merge (operand '7468' never formable without its own
     // merge) fires on neither path
@@ -136,7 +178,7 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
     val doc2 = Seq((1L, "the")).toDF("doc_id", "text")
     val k2 = piecesOf(doc2.select(col("doc_id"),
       ByteBpeEncode.byteBpePieces(col("text"), m2).as("p")))(1L)
-    val c2 = piecesOf(TextStats.encodeBpeBytes(doc2, "doc_id", "text", m2))(1L)
+    val c2 = piecesOf(chainPieces(doc2, "doc_id", "text", m2))(1L)
     assert(k2 == Seq("74", "68", "65") && c2 == k2)
   }
 
@@ -159,33 +201,41 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
     assert(local2 == dist2)
   }
 
-  test("trained-list row-identity at the chain's ceiling, and the >threshold delegation") {
+  test("trained-list row-identity at 64 merges: pieces and counts equal the chain") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val trained = TextStats.trainBpeBytesLocal(
-      TextStats.bytePretokenCounts(d, "text"),
-      numMerges = TextStats.ReplaceChainMaxMerges).map(m => (m._1, m._2))
-    assert(trained.size == TextStats.ReplaceChainMaxMerges,
-      "corpus must support a full threshold-size merge list")
-    // at exactly the threshold the public API still takes the chain...
-    val viaApi = TextStats.encodeBpeBytes(d, "doc_id", "text", trained)
-    assert(!viaApi.queryExecution.executedPlan.toString.contains("graft_byte_bpe"),
-      "<= threshold must stay on the oracle-replayable chain")
-    val chain = piecesOf(viaApi)
-    val kernel = piecesOf(d.select(col("doc_id"),
-      ByteBpeEncode.byteBpePieces(col("text"), trained).as("subwords")))
-    assert(kernel == chain,
-      "64-merge trained list: kernel row-identical to the chain")
-    // ...one more merge and every public surface routes to the kernel
-    val over = trained :+ ("FE", "FF")
-    val overApi = TextStats.encodeBpeBytes(d, "doc_id", "text", over)
-    assert(overApi.queryExecution.executedPlan.toString.contains("graft_byte_bpe_pieces"),
-      "> threshold must route to the native kernel")
-    assert(TextStats.encodeBpeBytesIds(d, "doc_id", "text", over)
-      .queryExecution.executedPlan.toString.contains("graft_byte_bpe_ids"))
-    assert(TextStats.applyBpeBytes(d, "doc_id", "text", over)
-      .queryExecution.executedPlan.toString.contains("graft_byte_bpe_count"))
-    // the (FE,FF) pair occurs nowhere, so both shapes stay comparable
-    assert(piecesOf(overApi) == chain)
+      TextStats.bytePretokenCounts(d, "text"), numMerges = 64)
+      .map(m => (m._1, m._2))
+    assert(trained.size == 64, "corpus must support a full 64-merge list")
+    val chain = piecesOf(chainPieces(d, "doc_id", "text", trained))
+    assert(piecesOf(TextStats.encodeBpeBytes(d, "doc_id", "text", trained)) ==
+      chain, "64-merge trained list: kernel pieces row-identical to the chain")
+    val chainN = d.select(col("doc_id"), chainCount(col("text"), trained))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val kN = TextStats.applyBpeBytes(d, "doc_id", "text", trained)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(kN == chainN, "64-merge trained list: kernel counts equal the chain's")
+  }
+
+  test("a duplicate result piece is rejected on every surface at any merge count") {
+    // (61,62) and (62,63) both fire, then (61,6263) and (6162,63) both
+    // produce 'abc' = 616263: the piece->id vocabulary is ambiguous
+    val dup = Seq(("61", "62"), ("62", "63"), ("61", "6263"), ("6162", "63"))
+    val docs = Seq((1L, "en", "abc abcd"), (2L, "en", ""),
+      (3L, "de", null.asInstanceOf[String])).toDF("doc_id", "lang", "text")
+    def rejects(name: String, run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains("duplicate merge result piece '616263'"),
+        s"$name: ${e.getMessage}")
+    }
+    rejects("encodeBpeBytes",
+      TextStats.encodeBpeBytes(docs, "doc_id", "text", dup).collect())
+    rejects("applyBpeBytes",
+      TextStats.applyBpeBytes(docs, "doc_id", "text", dup).collect())
+    rejects("byteBpeFertility",
+      TextStats.byteBpeFertility(docs, "text", Seq("lang"), dup).collect())
+    rejects("encodeBpeBytesIds",
+      TextStats.encodeBpeBytesIds(docs, "doc_id", "text", dup).collect())
   }
 
   test("production-size merge list: encode works, stays codegen'd, ids decode") {
@@ -193,7 +243,7 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
     val big = TextStats.trainBpeBytesLocal(
       TextStats.bytePretokenCounts(d, "text"), numMerges = 10000,
       minPairCount = 1L).map(m => (m._1, m._2))
-    assert(big.size > TextStats.ReplaceChainMaxMerges)
+    assert(big.size > 100, "the corpus must support a trained list past fixture scale")
     val enc = TextStats.encodeBpeBytesIds(d, "doc_id", "text", big)
     assert(enc.queryExecution.executedPlan.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]),

@@ -554,6 +554,92 @@ class ChatSpec extends AnyFunSuite {
     assert(n == 1, s"expected exactly one ids-mode kernel call, got $n")
   }
 
+  test("count==size seam: count-mode cells equal the ids-mode cell array, per conversation and per no-split window") {
+    // the packers size conversations with the kernel's COUNT mode
+    // (convCellCount) and fill them with its IDS mode (convCells); the
+    // two agree only if no pre-token spans a turn seam. Adversarial
+    // turns put template tokens, whitespace runs, contractions and
+    // multi-byte text against every seam; the merge lists include
+    // seam-crossing pairs (\n<, >\n, |>) and lists trained on the
+    // rendered template itself
+    val rnd = new scala.util.Random(20261019L)
+    val frags = Seq(" ", "  ", "\n", "\n\n", "\t", "\r\n", "\u000B",
+      "\u00A0", "<", "|", ">", "<|", "|>", "<|end|>", "<|end|>\n",
+      "<|user|>\n", "end", "the", " the", "and", " in", "on", "er", "é",
+      " café", "😀", "中文", "'s", "'ll", "42", " 7", "!", "?!", "x")
+    val roles = Seq("user", "assistant", "system", "tool", "", " assistant",
+      "assistant\n", "<|end|>", null)
+    def content(): String =
+      if (rnd.nextInt(10) == 0) null
+      else Seq.fill(rnd.nextInt(7))(frags(rnd.nextInt(frags.size))).mkString
+    val rows = (1L to 150L).map { id =>
+      id -> (if (id % 50 == 0) null
+      else Seq.fill(rnd.nextInt(6))(
+        Row(roles(rnd.nextInt(roles.size)), content())))
+    }
+    val df = frame(rows: _*).cache()
+    val rendered = Chat.renderChat(df.filter(col("conv").isNotNull), "conv")
+    def trained(texts: org.apache.spark.sql.DataFrame, textCol: String, n: Int) =
+      graft.operators.TextStats.trainBpeBytesLocal(
+        graft.operators.TextStats.bytePretokenCounts(texts, textCol),
+        numMerges = n, minPairCount = 1L).map(m => (m._1, m._2))
+    val mergeLists = Seq(
+      "fixture" -> Seq(("74", "68"), ("7468", "65"), ("20", "746865"),
+        ("69", "6E"), ("61", "6E"), ("616E", "64"), ("65", "72"), ("6F", "6E")),
+      "seam pairs" -> Seq(("0A", "3C"), ("3E", "0A"), ("7C", "3E"),
+        ("3C", "7C"), ("3C7C", "65"), ("0A", "0A"), ("20", "20"),
+        ("2020", "0A"), ("27", "73"), ("C3", "A9")),
+      "trained on renderings" -> trained(rendered, "rendered", 300),
+      "trained on corpus" -> trained(
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
+        "text", 10000))
+    for ((name, merges) <- mergeLists) {
+      // per conversation: the ids-mode cell array is whole (zip_with
+      // pads a short side with NULLs) and its size is the count-mode
+      // cell count the address pass uses
+      val cells = Chat.sftTokenizeMask(df, "id", "conv", merges).collect()
+        .filter(!_.isNullAt(1)).map { r =>
+          val ids = r.getSeq[Any](1)
+          val ms = r.getSeq[Any](2)
+          assert(!ids.contains(null) && !ms.contains(null) &&
+            ids.size == ms.size && r.getLong(3) == ids.size,
+            s"$name: conversation ${r.getLong(0)} cells are torn")
+          r.getLong(0) -> ids.size.toLong
+        }.toMap
+      val counted = Chat.sftPackedDocSpansNoSplit(df, "id", "conv", merges,
+        budget = 1 << 20, shards = 3).collect()
+        .map(r => r.getLong(2) -> r.getLong(4)).toMap
+      assert(cells.size == rows.count(_._2 != null))
+      assert(counted == cells,
+        s"$name: convCellCount must equal size(convCells) per conversation")
+      // per window: sum(span_len) (n_tokens) must equal the assembled
+      // cell array's size, read back as the non-pad prefix under a pad
+      // id no real cell carries
+      for (budget <- Seq(5, 37)) {
+        val windows = Chat.sftPackedTokenIdsNoSplit(df, "id", "conv", merges,
+          budget = budget, shards = 3, padId = Some(-1L)).collect()
+          .map { r =>
+            val ids = r.getSeq[Any](2)
+            assert(!ids.contains(null) && ids.size == budget &&
+              r.getSeq[Any](3).size == budget,
+              s"$name/$budget: window (${r.getLong(0)}, ${r.getLong(1)})")
+            val real = ids.count(_ != -1L).toLong
+            assert(real == r.getLong(4),
+              s"$name/$budget: sum(span_len) ${r.getLong(4)} != " +
+                s"size(__cells) $real in window (${r.getLong(0)}, ${r.getLong(1)})")
+            (r.getLong(0), r.getLong(1)) -> real
+          }.toMap
+        val spanSums = Chat.sftPackedDocSpansNoSplit(df, "id", "conv", merges,
+          budget = budget, shards = 3).collect()
+          .groupBy(r => (r.getLong(0), r.getLong(1)))
+          .map { case (k, rs) => k -> rs.map(_.getLong(4)).sum }
+        assert(spanSums == windows,
+          s"$name/$budget: span table and packed windows must agree")
+      }
+    }
+    df.unpersist()
+  }
+
   test("sftPackedTokenIdsNoSplit: any numeric id type packs identically") {
     // ADVICE r17: the address scan read the id with getLong, so an
     // IntegerType doc id threw ClassCastException while the sibling

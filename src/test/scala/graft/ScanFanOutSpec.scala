@@ -41,7 +41,7 @@ class ScanFanOutSpec extends AnyFunSuite {
     val big = small.crossJoin(small.select(col("doc_id").as("b")))
       .crossJoin(small.select(col("doc_id").as("c")))
     assert(big.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(ScanFanOut.maxBytes), "fixture must estimate above threshold")
+      BigInt(ScanFanOut.MaxBytes), "fixture must estimate above threshold")
     assert(repartitions(ScanFanOut(big)) == 0,
       "above-threshold frames must not fan out")
   }
@@ -49,15 +49,6 @@ class ScanFanOutSpec extends AnyFunSuite {
   test("a streaming frame passes through unchanged") {
     val stream = spark.readStream.format("rate").load()
     assert(ScanFanOut(stream) eq stream)
-  }
-
-  test("a malformed SPARK_GRAFT_FANOUT_MAX_BYTES fails naming the variable") {
-    assert(ScanFanOut.parseMaxBytes(None) == 256L * 1024 * 1024)
-    assert(ScanFanOut.parseMaxBytes(Some(" 1024 ")) == 1024L)
-    for (bad <- Seq("256MB", "", "-1", "1e9")) {
-      val e = intercept[IllegalArgumentException](ScanFanOut.parseMaxBytes(Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_FANOUT_MAX_BYTES"), bad)
-    }
   }
 
   test("size estimation swallows only non-fatal failures") {

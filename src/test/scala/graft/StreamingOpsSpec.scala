@@ -691,7 +691,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val merges = Seq(("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"))
     val rows = staticDocs.as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
-    val out = StreamingOps.streamingApplyBpe(mem.toDF().toDF("doc_id", "text"),
+    val out = graft.operators.TextStats.applyBpe(mem.toDF().toDF("doc_id", "text"),
       "doc_id", "text", merges)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("stream_bpe")
@@ -705,22 +705,22 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("streaming byte-BPE ids equal batch on BOTH encode paths (chain and kernel)") {
+  test("streaming byte-BPE ids equal batch under a fixture and a 10k trained merge list") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val staticDocs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     val rows = staticDocs.as[(Long, String)].collect().toSeq
     val fixture = Seq(("74", "68"), ("7468", "65"), ("20", "746865"))
-    // a trained above-threshold list forces the ByteBpeEncode kernel —
-    // the reference-object path must serialize into streaming tasks too
+    // a production-size trained list: the kernel's reference-object
+    // model must serialize into streaming tasks at any table size
     val big = graft.operators.TextStats.trainBpeBytesLocal(
       graft.operators.TextStats.bytePretokenCounts(staticDocs, "text"),
       numMerges = 10000, minPairCount = 1L).map(m => (m._1, m._2))
-    assert(big.size > graft.operators.TextStats.ReplaceChainMaxMerges)
-    for ((merges, name) <- Seq((fixture, "chain"), (big, "kernel"))) {
+    assert(big.size > 100, "the corpus must support a trained list past fixture scale")
+    for ((merges, name) <- Seq((fixture, "fixture"), (big, "trained"))) {
       val mem = MemoryStream[(Long, String)]
-      val out = StreamingOps.streamingEncodeBpeBytesIds(
+      val out = graft.operators.TextStats.encodeBpeBytesIds(
         mem.toDF().toDF("doc_id", "text"), "doc_id", "text", merges)
       assert(out.isStreaming)
       val q = out.writeStream.format("memory").queryName(s"stream_bpe_$name")
@@ -732,7 +732,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       val want = graft.operators.TextStats.encodeBpeBytesIds(
           staticDocs, "doc_id", "text", merges)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      assert(got == want, s"$name path must match batch row-for-row")
+      assert(got == want, s"$name list must match batch row-for-row")
     }
   }
 
@@ -750,7 +750,7 @@ class StreamingOpsSpec extends AnyFunSuite {
           reverse(col("text")).as("content"))).as("conv"))
     val rows = staticDocs.as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
-    val out = StreamingOps.streamingSftTokenizeMask(
+    val out = graft.operators.Chat.sftTokenizeMask(
       convify(mem.toDF().toDF("doc_id", "text")), "doc_id", "conv", fixture)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("stream_sft_tok")
@@ -784,7 +784,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val src = mem.toDF().toDF("doc_id", "text")
     // tokenize in-stream, then detokenize in-stream: the composed
     // round trip must return the source text row-for-row
-    val out = StreamingOps.streamingDetokenize(
+    val out = graft.operators.TextStats.detokenize(
       src.select(col("doc_id"), graft.functions.ByteBpeEncode.byteBpeIds(
         col("text"), fixture).as("ids")), "doc_id", "ids", fixture)
     assert(out.isStreaming)
@@ -797,7 +797,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(got == rows.toMap, "in-stream round trip must return the source")
 
     val mem2 = MemoryStream[(Long, String)]
-    val out2 = StreamingOps.streamingTokenOffsets(
+    val out2 = graft.operators.TextStats.tokenOffsets(
       mem2.toDF().toDF("doc_id", "text"), "doc_id", "text", fixture)
     assert(out2.isStreaming)
     val q2 = out2.writeStream.format("memory").queryName("stream_offs")
@@ -821,7 +821,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .select("doc_id", "text")
     val rows = staticDocs.as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
-    val out = StreamingOps.streamingFimTransform(
+    val out = graft.operators.TextStats.fimTransform(
       mem.toDF().toDF("doc_id", "text"), "doc_id", "text", 0.5, 0.5)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("stream_fim")
@@ -849,7 +849,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .select("doc_id", "text")
     val rows = staticDocs.as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
-    val out = StreamingOps.streamingSpanCorrupt(
+    val out = graft.operators.TextStats.spanCorrupt(
       mem.toDF().toDF("doc_id", "text"), "doc_id", "text")
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("stream_spancorrupt")
@@ -877,7 +877,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       "c" -> -2.0, "a" -> -2.0, "t" -> -2.0)
     val rows = Seq((1L, "the cat"), (2L, "that cat"), (3L, "zz"))
     val mem = MemoryStream[(Long, String)]
-    val out = StreamingOps.streamingApplyUnigramLm(
+    val out = graft.operators.TextStats.applyUnigramLm(
       mem.toDF().toDF("doc_id", "text"), "doc_id", "text", vocab)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("stream_unigram")
