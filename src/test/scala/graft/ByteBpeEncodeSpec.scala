@@ -44,20 +44,23 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
   // merges exhaustively in training order over each pre-token's
   // sentinel-wrapped hex byte symbols (the DuckDB oracles' replay)
 
-  private def byteSymbolString(tok: Column): Column =
-    regexp_replace(hex(encode(tok, "UTF-8")), "(..)", "\u0001$1\u0002")
+  private val OPEN = "\u0001"
+  private val CLOSE = "\u0002"
+
+  /** One pre-token's sentinel-wrapped symbol string after the chain. */
+  private def chainFolded(tok: Column, merges: Seq[(String, String)]): Column =
+    merges.foldLeft(
+      regexp_replace(hex(encode(tok, "UTF-8")), "(..)", OPEN + "$1" + CLOSE)) {
+      case (s, (l, r)) =>
+        replace(s, lit(OPEN + l + CLOSE + OPEN + r + CLOSE),
+          lit(OPEN + l + r + CLOSE))
+    }
 
   /** Reference pieces: (doc_id, subwords), NULL text → NULL. */
   private def chainPieces(docs: DataFrame, idCol: String, textCol: String,
                           merges: Seq[(String, String)]): DataFrame = {
-    val OPEN = "\u0001"
-    val CLOSE = "\u0002"
     val perTok = transform(TextStats.bytePretokens(col(textCol)), tok => {
-      val folded = merges.foldLeft(byteSymbolString(tok)) {
-        case (s, (l, r)) =>
-          replace(s, lit(OPEN + l + CLOSE + OPEN + r + CLOSE),
-            lit(OPEN + l + r + CLOSE))
-      }
+      val folded = chainFolded(tok, merges)
       // strip the outer sentinels, split on the close+open seams
       split(folded.substr(lit(2), length(folded) - 2), CLOSE + OPEN)
     })
@@ -66,14 +69,8 @@ class ByteBpeEncodeSpec extends AnyFunSuite {
 
   /** Reference subword count of `text`: count open sentinels. */
   private def chainCount(text: Column, merges: Seq[(String, String)]): Column = {
-    val OPEN = "\u0001"
-    val CLOSE = "\u0002"
     val perTok = transform(TextStats.bytePretokens(text), tok => {
-      val folded = merges.foldLeft(byteSymbolString(tok)) {
-        case (s, (l, r)) =>
-          replace(s, lit(OPEN + l + CLOSE + OPEN + r + CLOSE),
-            lit(OPEN + l + r + CLOSE))
-      }
+      val folded = chainFolded(tok, merges)
       (length(folded) - length(translate(folded, OPEN, ""))).cast(LongType)
     })
     aggregate(perTok, lit(0L), (a, x) => a + x)
