@@ -705,7 +705,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("streaming byte-BPE ids equal batch under a fixture and a 10k trained merge list") {
+  test("streaming byte-BPE ids equal batch under fixture and 10k trained merges") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val staticDocs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
