@@ -555,15 +555,15 @@ object ExtensionQueries {
         asofClicks(s, dir), asofViews(s, dir), "user_id", "ts",
         Seq("view_value")))),
 
-    // the THIRD execution path: the custom LogicalPlan + Strategy +
-    // SparkPlan (AsofJoinExec — co-partitioned two-pointer merge),
-    // graded on the same oracle text again
+    // the same window plan as q_events_asof under a second register
+    // name, kept so register and bench histories stay comparable;
+    // graded on the same oracle text
     "q_events_asof_exec" -> ((s, dir) =>
-      det(graft.plans.GraftExtensions.asofJoinExec(
+      det(graft.operators.Temporal.asofJoin(
         asofClicks(s, dir), asofViews(s, dir), "user_id", "ts",
         Seq("view_value")))),
 
-    // the FOURTH execution path: the monster-key scale-out —
+    // the THIRD execution path: the monster-key scale-out —
     // (key, ts-bucket) range partitioning with a boundary-carry pass,
     // so one bot user can never serialize the job on a single task;
     // graded on the same oracle text again (few buckets force carries)
@@ -2493,12 +2493,17 @@ object ExtensionQueries {
     // canonicalizer sorts with pandas sort_values, which crashes on
     // array-typed cells (SURVEY §7.5 #12) — the array-returning Scala
     // API is unchanged; only the graded projection is flattened, and
-    // the pos column pins the exact in-document piece order.
+    // the pos column pins the exact in-document piece order. The OUTER
+    // posexplode plus a pos filter drops NULL/empty arrays exactly like
+    // posexplode, but gives Catalyst no `size(subwords) > 0` constraint
+    // to infer, so the kernel is not inlined into a Filter as well and
+    // runs once per document.
     "q_text_bpe_bytes_pieces" -> ((s, dir) =>
       det(graft.operators.TextStats.encodeBpeBytes(docs(s, dir), "doc_id",
         "text", ByteBpeFixtureMerges)
         .select(col("doc_id"),
-          posexplode(col("subwords")).as(Seq("pos", "piece")))
+          posexplode_outer(col("subwords")).as(Seq("pos", "piece")))
+        .filter(col("pos").isNotNull)
         .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
           col("piece")))),
 
@@ -2530,7 +2535,8 @@ object ExtensionQueries {
         graft.functions.ByteBpeEncode.byteBpePieces(col("text"),
           ByteBpeFixtureMerges).as("subwords"))
         .select(col("doc_id"),
-          posexplode(col("subwords")).as(Seq("pos", "piece")))
+          posexplode_outer(col("subwords")).as(Seq("pos", "piece")))
+        .filter(col("pos").isNotNull)
         .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
           col("piece")))),
 

@@ -26,7 +26,7 @@ import org.yaml.snakeyaml.Yaml
  * The optional `skew` mapping exposes the monster-key hardened paths
  * (r16): when `share` is set, the compiled plan probes the key
  * distribution once
- * ([[graft.plans.GraftExtensions.heavyKeyProbeCached]]) and takes
+ * ([[graft.plans.KeyProbes.heavyKeyProbeCached]]) and takes
  * [[graft.operators.Temporal.asofJoinSkewed]] /
  * [[graft.operators.Windowed.sessionizeSkewed]] on a hit — a config
  * user gets the (key, ts-bucket) + boundary-carry plans without

@@ -334,8 +334,8 @@ object Chat {
    * (task, family) — nearly the full corpus, same as the window — but
    * pays struct packing/unpacking on every row; measured ~even at
    * fixture scale, and the window plan composes with the pipeline's
-   * other window steps. [[dedupByAssistantAuto]] routes on the sampled
-   * fingerprint probe so only frames with a monster family switch.
+   * other window steps. Call this path only for a frame known to hold
+   * a monster family.
    */
   def dedupByAssistantSkewed(df: DataFrame, idCol: String,
                              convCol: String): DataFrame = {
@@ -364,19 +364,6 @@ object Chat {
         concat(lit("__noans#"), col(idCol).cast(StringType))))
       .drop("__norm")
   }
-
-  /**
-   * Routed [[dedupByAssistant]]: sampled+memoized heavy-key probe on
-   * the assistant fingerprint ([[graft.plans.GraftExtensions
-   * .heavyKeyProbeCached]]), [[dedupByAssistantSkewed]] on a hit, the
-   * window plan otherwise; `skewShare = None` pins the window plan.
-   */
-  def dedupByAssistantAuto(df: DataFrame, idCol: String, convCol: String,
-                           skewShare: Option[Double] = Some(0.25)): DataFrame =
-    if (skewShare.exists(s => graft.plans.GraftExtensions
-        .heavyKeyProbeCached(withAssistantFp(df, idCol, convCol), "__fp", s)))
-      dedupByAssistantSkewed(df, idCol, convCol)
-    else dedupByAssistant(df, idCol, convCol)
 
   /**
    * Conversation-level benchmark decontamination — [[Dedup

@@ -174,8 +174,7 @@ object Dedup {
    * The price — and why the window stays the DEFAULT: the input plan
    * is evaluated on BOTH join sides (measured 2.4x on a pipeline
    * whose input is itself expensive; the window path scans once).
-   * [[duplicationWeightsAuto]] routes on a sampled heavy-key probe so
-   * only frames that would actually single-task pay it.
+   * Call this path only for a frame known to hold a monster family.
    */
   def duplicationWeightsSkewed(df: DataFrame, keyCol: String,
                                byFingerprint: Boolean = false): DataFrame = {
@@ -190,26 +189,6 @@ object Dedup {
         withFp("__fp") <=> counts("__fpc"))
       .withColumn("weight", round(lit(1.0) / col("n_copies"), 6))
       .select(df.columns.map(col) :+ col("n_copies") :+ col("weight"): _*)
-  }
-
-  /**
-   * Routed [[duplicationWeights]]: sampled+memoized heavy-key probe
-   * ([[graft.plans.GraftExtensions.heavyKeyProbeCached]]) on the
-   * fingerprint, [[duplicationWeightsSkewed]] on a hit, the
-   * single-scan window plan otherwise; `skewShare = None` pins the
-   * window plan. The probe shares the operator's own shuffle key (the
-   * md5 fingerprint when `byFingerprint`), so what it measures is
-   * literally the partition-buffer skew the window path would suffer.
-   */
-  def duplicationWeightsAuto(df: DataFrame, keyCol: String,
-                             byFingerprint: Boolean = false,
-                             skewShare: Option[Double] = Some(0.25)): DataFrame = {
-    val key = if (byFingerprint) md5(col(keyCol)) else col(keyCol)
-    val probed = df.withColumn("__probe_fp", key)
-    if (skewShare.exists(s => graft.plans.GraftExtensions
-        .heavyKeyProbeCached(probed, "__probe_fp", s)))
-      duplicationWeightsSkewed(df, keyCol, byFingerprint)
-    else duplicationWeights(df, keyCol, byFingerprint)
   }
 
   /** (id, distinct shingle hashes) pairs for a document frame — the

@@ -208,20 +208,6 @@ object Preference {
   }
 
   /**
-   * Routed [[dedupPairs]]: sampled+memoized heavy-key probe on the
-   * pair fingerprint ([[graft.plans.GraftExtensions
-   * .heavyKeyProbeCached]]), [[dedupPairsSkewed]] on a hit, the window
-   * plan otherwise; `skewShare = None` pins the window plan.
-   */
-  def dedupPairsAuto(df: DataFrame, idCol: String, promptCol: String,
-                     chosenCol: String,
-                     skewShare: Option[Double] = Some(0.25)): DataFrame =
-    if (skewShare.exists(s => graft.plans.GraftExtensions.heavyKeyProbeCached(
-        withPairFp(df, idCol, promptCol, chosenCol), "__fp", s)))
-      dedupPairsSkewed(df, idCol, promptCol, chosenCol)
-    else dedupPairs(df, idCol, promptCol, chosenCol)
-
-  /**
    * Per-pair token accounting — the [[Chat.chatStats]] sibling for
    * preference rows, the columns DPO length filtering and batch
    * packing read: prompt/chosen/rejected token counts (`\S+` scan,

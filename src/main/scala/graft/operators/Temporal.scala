@@ -29,9 +29,10 @@ import org.apache.spark.sql.functions._
  * Skewed keys land on one task like any per-key window; the scale-out
  * for monster keys is [[asofJoinSkewed]] — range-partitioning
  * (key, ts-bucket) with a boundary-carry pass over the same union
- * layout — and [[graft.plans.GraftExtensions.asofJoinExec]] can probe
- * for heavy keys and route to it (AQE cannot: its skew-join splitting
- * only rewrites join operators it knows).
+ * layout — which the events config's skew mapping picks after a
+ * heavy-key probe ([[graft.plans.KeyProbes.heavyKeyProbeCached]]);
+ * AQE cannot: its skew-join splitting only rewrites join operators it
+ * knows.
  */
 object Temporal {
 
@@ -170,11 +171,11 @@ object Temporal {
    * Three shuffles total — (key, bucket) for the window+join, the
    * tiny carry aggregate, the tiny carry window — versus one for
    * [[asofJoin]]: worth it exactly when a key is big enough to
-   * serialize, which is why [[graft.plans.GraftExtensions.asofJoinExec]]
+   * serialize, which is why the events config's skew mapping
    * routes here only on a positive heavy-key probe. AQE never fixes
    * this case by itself: its skew-join splitting rewrites only the
-   * join operators it knows, and a window (or a custom exec) over a
-   * skewed exchange runs as-is.
+   * join operators it knows, and a window over a skewed exchange runs
+   * as-is.
    *
    * Tie-break, NULL, and tolerance contracts are [[asofJoin]]'s:
    * equal timestamps match; among right rows tied on (key, ts)
@@ -386,17 +387,16 @@ object Temporal {
    * to get its Auto front door (VERDICT r16 #4): sampled+memoized
    * heavy-key probe, [[timeWeightedAvgSkewed]] on a hit,
    * [[timeWeightedAvg]] otherwise; `skewShare = None` pins the plain
-   * plan. No type gate needed (unlike
-   * [[graft.operators.Windowed.rollingAggAuto]]): BOTH execution
-   * paths order and bucket by `cast(ts as timestamp)`, so bucket
-   * order always equals the plain window's sort order.
+   * plan. No type gate needed: BOTH execution paths order and bucket
+   * by `cast(ts as timestamp)`, so bucket order always equals the
+   * plain window's sort order.
    */
   def timeWeightedAvgAuto(log: DataFrame, keyCol: String, tsCol: String,
                           valueCol: String, tieCol: String,
                           skewShare: Option[Double] = Some(0.25),
                           numBuckets: Int = 64): DataFrame =
     if (skewShare.exists(s =>
-      graft.plans.GraftExtensions.heavyKeyProbeCached(log, keyCol, s)))
+      graft.plans.KeyProbes.heavyKeyProbeCached(log, keyCol, s)))
       timeWeightedAvgSkewed(log, keyCol, tsCol, valueCol, tieCol, numBuckets)
     else timeWeightedAvg(log, keyCol, tsCol, valueCol, tieCol)
 
@@ -461,22 +461,6 @@ object Temporal {
       log.withColumnRenamed(tsCol, "grid_ts"), keyCol,
       "grid_ts", payloadCols, rightTieCol = rightTieCol,
       numBuckets = numBuckets)
-
-  /**
-   * Routed LOCF resample — sampled heavy-key probe on the LOG side
-   * (the side whose per-key history serializes), skewed plan on a
-   * hit; `skewShare = None` pins the plain plan.
-   */
-  def resampleLocfAuto(log: DataFrame, keyCol: String, tsCol: String,
-                       payloadCols: Seq[String], unit: String,
-                       rightTieCol: Option[String] = None,
-                       skewShare: Option[Double] = Some(0.25),
-                       numBuckets: Int = 64): DataFrame =
-    if (skewShare.exists(s =>
-      graft.plans.GraftExtensions.heavyKeyProbeCached(log, keyCol, s)))
-      resampleLocfSkewed(log, keyCol, tsCol, payloadCols, unit, rightTieCol,
-        numBuckets)
-    else resampleLocf(log, keyCol, tsCol, payloadCols, unit, rightTieCol)
 
   /**
    * Broadcast as-of join — the zero-fact-shuffle variant of
@@ -681,23 +665,6 @@ object Temporal {
       .select(col("__k").as(keyCol), col("valid_from"), col("valid_to"),
         col("__v").as(valueCol), col("version"))
   }
-
-  /**
-   * Routed SCD2 — the [[graft.plans.GraftExtensions.asofJoinExec]]
-   * convention: probe the key distribution once (sampled, exact
-   * fallback near the threshold) and take [[changeIntervalsSkewed]]
-   * only when a monster key would serialize [[changeIntervals]]'s
-   * per-key windows. `skewShare = None` pins the plain plan.
-   */
-  def changeIntervalsAuto(log: DataFrame, keyCol: String, tsCol: String,
-                          valueCol: String,
-                          tieCol: Option[String] = None,
-                          skewShare: Option[Double] = Some(0.25),
-                          numBuckets: Int = 64): DataFrame =
-    if (skewShare.exists(s =>
-      graft.plans.GraftExtensions.heavyKeyProbeCached(log, keyCol, s)))
-      changeIntervalsSkewed(log, keyCol, tsCol, valueCol, tieCol, numBuckets)
-    else changeIntervals(log, keyCol, tsCol, valueCol, tieCol)
 
   /**
    * Point-in-time table SNAPSHOT — "the table AS OF time T": each

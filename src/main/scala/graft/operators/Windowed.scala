@@ -160,9 +160,8 @@ object Windowed {
   }
 
   /**
-   * Routed sessionization — the [[graft.plans.GraftExtensions.asofJoinExec]]
-   * convention applied to sessions: probe the key distribution once
-   * ([[graft.plans.GraftExtensions.heavyKeyExistsSampled]] — sampled,
+   * Routed sessionization: probe the key distribution once
+   * ([[graft.plans.KeyProbes.heavyKeyProbeCached]] — sampled,
    * exact fallback near the threshold) and pick [[sessionizeSkewed]]
    * when a monster key would serialize the per-key window,
    * [[sessionizeBatch]] otherwise (its single shuffle is cheaper on
@@ -173,7 +172,7 @@ object Windowed {
                      skewShare: Option[Double] = Some(0.25),
                      numBuckets: Int = 64): DataFrame =
     if (skewShare.exists(s =>
-      graft.plans.GraftExtensions.heavyKeyProbeCached(events, userCol, s)))
+      graft.plans.KeyProbes.heavyKeyProbeCached(events, userCol, s)))
       sessionizeSkewed(events, userCol, tsCol, gapSeconds, numBuckets)
     else sessionizeBatch(events, userCol, tsCol, gapSeconds)
 
@@ -364,31 +363,6 @@ object Windowed {
       .select(col("__k").as(keyCol), col("__ts").as(tsCol),
         col("__tie").as(tieBreakCol), col("__v").as(valueCol),
         col("roll_avg"), col("roll_min"), col("roll_max"), col("roll_n"))
-  }
-
-  /**
-   * Routed rolling aggregate — sampled heavy-key probe (exact
-   * fallback near the threshold), [[rollingAggSkewed]] on a hit,
-   * [[rollingAgg]] otherwise; `skewShare = None` pins the plain plan.
-   */
-  def rollingAggAuto(events: DataFrame, keyCol: String, tsCol: String,
-                     valueCol: String, nRows: Int, tieBreakCol: String,
-                     skewShare: Option[Double] = Some(0.25),
-                     numBuckets: Int = 64): DataFrame = {
-    // ts types the bucketed plan cannot take (see rollingAggSkewed's
-    // gate) stay on the plain plan WITHOUT probing — routing is
-    // advisory, and erroring only when a monster key happens to exist
-    // would make failure distribution-dependent (the ADVICE r15 #1
-    // class)
-    val bucketable = events.schema.fields.find(_.name == tsCol).exists(f =>
-      f.dataType.isInstanceOf[org.apache.spark.sql.types.TimestampType] ||
-        f.dataType.isInstanceOf[org.apache.spark.sql.types.DateType] ||
-        f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    if (bucketable && skewShare.exists(s =>
-      graft.plans.GraftExtensions.heavyKeyProbeCached(events, keyCol, s)))
-      rollingAggSkewed(events, keyCol, tsCol, valueCol, nRows, tieBreakCol,
-        numBuckets)
-    else rollingAgg(events, keyCol, tsCol, valueCol, nRows, tieBreakCol)
   }
 
   /**
@@ -1002,7 +976,7 @@ object Windowed {
    * decision) follows the skew paths' convention: pass
    * `knownKeys` when the caller/catalog knows the cardinality (no
    * data touched), else a sampled+memoized probe
-   * ([[graft.plans.GraftExtensions.distinctKeysProbeCached]]) sketches
+   * ([[graft.plans.KeyProbes.distinctKeysProbeCached]]) sketches
    * a ~2% deterministic sample once per JVM. Routing is a wall-clock
    * choice — both plans are exact — so a boundary miss is perf-only
    * (and the probe's bias runs toward the sharded plan, the safe
@@ -1019,7 +993,7 @@ object Windowed {
           f.dataType == org.apache.spark.sql.types.StringType)
     lazy val manyKeys = knownKeys match {
       case Some(k) => k > maxPlainKeys
-      case None => graft.plans.GraftExtensions.distinctKeysProbeCached(
+      case None => graft.plans.KeyProbes.distinctKeysProbeCached(
         events, keyCol, threshold = math.min(maxPlainKeys, Long.MaxValue - 1) + 1)
     }
     if (routableKey && manyKeys)

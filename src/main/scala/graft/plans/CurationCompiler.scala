@@ -425,12 +425,12 @@ object CurationCompiler {
     val rightSide = events.filter(col(cfg.typeCol) === cfg.rightType)
       .groupBy(col(cfg.userCol), col(cfg.tsCol))
       .agg(max_by(col(cfg.valueCol), col(cfg.idCol)).as("view_value"))
-    // skew mapping set -> the asofJoinExec routing convention: probe
-    // once (sampled, memoized), hardened (key, ts-bucket) plans on a
+    // skew mapping set -> probe the left side's keys once (sampled,
+    // memoized, KeyProbes), hardened (key, ts-bucket) plans on a
     // hit; identical output either way (the skewed operators are
     // graded on the same oracle texts as the plain ones)
     val skewHit = cfg.skewShare.exists(s =>
-      graft.plans.GraftExtensions.heavyKeyProbeCached(leftSide,
+      graft.plans.KeyProbes.heavyKeyProbeCached(leftSide,
         cfg.userCol, s))
     val enriched =
       if (skewHit)

@@ -9,7 +9,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
  * can be used as Columns without registering session extensions — the
  * standard technique for Spark extension libraries that ship custom
  * expressions (Spark 4 removed the public Column(Expression)
- * constructor in the Connect refactor).
+ * constructor in the Connect refactor). It also holds the two other
+ * `private[sql]`/`private[spark]` reads graft needs: a non-blocking
+ * Observation read and a frame without its top-level Sort.
  */
 object GraftColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -62,19 +64,4 @@ object GraftColumnBridge {
           df.sparkSession.asInstanceOf[classic.SparkSession], s.child)
       case _ => df
     }
-
-  /** DataFrame over an arbitrary (already-resolved) logical plan —
-    * how graft's custom plan nodes (e.g. graft.plans.AsofJoinNode)
-    * enter the public Dataset API (`classic.Dataset.ofRows` is
-    * `private[sql]`, hence the bridge). */
-  def dataFrame(spark: SparkSession,
-                plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Dataset[Row] =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Read back the planner strategies an extensions registrar
-    * injected (`buildPlannerStrategies` is `private[sql]`) — lets the
-    * suite assert the `spark.sql.extensions` registration path. */
-  def plannerStrategies(ext: SparkSessionExtensions,
-                        spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
-    ext.buildPlannerStrategies(spark)
 }

@@ -187,7 +187,7 @@ class ChatSpec extends AnyFunSuite {
       .isEmpty)
   }
 
-  test("dedupByAssistantSkewed equals dedupByAssistant; Auto routes on a monster family") {
+  test("dedupByAssistantSkewed equals dedupByAssistant on the fixture and a monster family") {
     // planted-fixture parity first (covers normalization, multi-turn
     // concat, no-assistant singletons)
     val fixture = frame(
@@ -218,19 +218,6 @@ class ChatSpec extends AnyFunSuite {
     val nodes = PlanWalk.nodes(skewed).map(_.nodeName.toLowerCase)
     assert(!nodes.exists(_.contains("window")),
       s"one-pass aggregate plan must not contain a window, got: ${nodes.mkString(", ")}")
-    // routed front door, both directions
-    val auto = Chat.dedupByAssistantAuto(big, "id", "conv")
-    assert(asSet(auto) == want)
-    assert(!PlanWalk.nodes(auto).map(_.nodeName.toLowerCase)
-      .exists(_.contains("window")), "monster family must route to the aggregate plan")
-    val uniform = big.withColumn("conv", array(
-      struct(lit("user").as("role"), concat(lit("q"), col("id")).as("content")),
-      struct(lit("assistant").as("role"),
-        concat(lit("unique answer "), col("id")).as("content"))))
-    val plain = Chat.dedupByAssistantAuto(uniform, "id", "conv")
-    plain.collect()
-    assert(PlanWalk.nodes(plain).map(_.nodeName.toLowerCase)
-      .exists(_.contains("window")), "well-distributed families stay on the window plan")
   }
 
   test("dedupByAssistant keeps the lowest id per normalized answer set") {

@@ -910,7 +910,7 @@ class DedupSpec extends AnyFunSuite {
       "rollingAggSkewed's tail pre-trim must plan a map-side WindowGroupLimit")
   }
 
-  test("duplicationWeightsSkewed equals the window path on a planted monster family; Auto routes") {
+  test("duplicationWeightsSkewed equals the window path on a planted monster family") {
     // 60% of rows share ONE text (the crawl-scale boilerplate family
     // the window path would buffer in a single task), 20% are a NULL
     // family (one family under partitionBy — the join-back must be
@@ -935,17 +935,6 @@ class DedupSpec extends AnyFunSuite {
       s"skewed path must not plan a window, got: ${nodes.mkString(", ")}")
     assert(nodes.exists(_.contains("shuffledhashjoin")),
       s"expected a shuffled-hash join-back, got: ${nodes.mkString(", ")}")
-    // routed front door: monster family -> skewed, uniform -> window
-    val auto = Dedup.duplicationWeightsAuto(big, "text", byFingerprint = true)
-    assert(asSet(auto) == want)
-    assert(!PlanWalk.nodes(auto).map(_.nodeName.toLowerCase)
-      .exists(_.contains("window")), "monster family must route to the join-back plan")
-    val uniform = spark.range(4000).select(col("id").as("doc_id"),
-      concat(lit("u"), col("id")).as("text"))
-    val plain = Dedup.duplicationWeightsAuto(uniform, "text", byFingerprint = true)
-    plain.collect()
-    assert(PlanWalk.nodes(plain).map(_.nodeName.toLowerCase)
-      .exists(_.contains("window")), "well-distributed keys stay on the single-scan window plan")
   }
 
   test("scrubContaminatedWindows cuts only eval-overlapping spans") {

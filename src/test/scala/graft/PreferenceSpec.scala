@@ -95,7 +95,7 @@ class PreferenceSpec extends AnyFunSuite {
       "no-evidence pairs never collapse into one skewed family")
   }
 
-  test("dedupPairsSkewed equals dedupPairs; Auto routes on a monster family") {
+  test("dedupPairsSkewed equals dedupPairs on the fixture and a monster family") {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "n_copies").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
@@ -121,15 +121,6 @@ class PreferenceSpec extends AnyFunSuite {
     assert(!PlanWalk.nodes(skewed).map(_.nodeName.toLowerCase)
       .exists(_.contains("window")),
       "one-pass aggregate plan must not contain a window")
-    val auto = Preference.dedupPairsAuto(big, "id", "prompt", "chosen")
-    assert(asSet(auto) == want)
-    assert(!PlanWalk.nodes(auto).map(_.nodeName.toLowerCase)
-      .exists(_.contains("window")), "monster family must route to the aggregate plan")
-    val uniform = big.withColumn("chosen", concat(lit("unique"), col("id")))
-    val plain = Preference.dedupPairsAuto(uniform, "id", "prompt", "chosen")
-    plain.collect()
-    assert(PlanWalk.nodes(plain).map(_.nodeName.toLowerCase)
-      .exists(_.contains("window")), "well-distributed families stay on the window plan")
   }
 
   test("dedupPairs refuses a pre-existing n_copies column") {

@@ -676,22 +676,9 @@ class TemporalSpec extends AnyFunSuite {
     }
     assert(winParts.contains(2),
       s"expected (key, bucket)-partitioned local windows, got $winParts")
-    // routed front door: the monster log takes the skewed plan, a
-    // uniform log keeps the single-shuffle plain plan
-    assert(asSet(Temporal.changeIntervalsAuto(big, "k", "ts", "v",
+    // and at the default bucket count
+    assert(asSet(Temporal.changeIntervalsSkewed(big, "k", "ts", "v",
       tieCol = Some("tie"))) == want)
-    val uniform = spark.range(4000).select((col("id") % 211).as("k"),
-      timestamp_millis(lit(1700000000000L) + col("id") * 1000L).as("ts"),
-      (col("id") % 3).cast("string").as("v"), col("id").as("tie"))
-    val plain = Temporal.changeIntervalsAuto(uniform, "k", "ts", "v",
-      tieCol = Some("tie"))
-    plain.collect()
-    val plainParts = PlanWalk.nodes(plain).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec =>
-        w.partitionSpec.length
-    }
-    assert(plainParts.nonEmpty && plainParts.forall(_ == 1),
-      "well-distributed keys stay on the plain per-key plan")
   }
 
   test("resampleLocfSkewed equals resampleLocf: real views, bucket counts, monster log") {
@@ -718,8 +705,8 @@ class TemporalSpec extends AnyFunSuite {
     val bw = asSet(Temporal.resampleLocf(big, "k", "ts", Seq("v"), "day"))
     assert(asSet(Temporal.resampleLocfSkewed(big, "k", "ts", Seq("v"), "day",
       numBuckets = 16)) == bw)
-    assert(asSet(Temporal.resampleLocfAuto(big, "k", "ts", Seq("v"), "day"))
-      == bw, "routed front door must agree on the monster log")
+    assert(asSet(Temporal.resampleLocfSkewed(big, "k", "ts", Seq("v"), "day"))
+      == bw, "the default bucket count must agree on the monster log")
   }
 
   test("rangeJoin plan: hash equi-join on the bucket, no nested loop") {

@@ -669,7 +669,7 @@ class WindowedSpec extends AnyFunSuite {
     assert(gotN == wantN, "NULL-ts rows must chain through the sentinel bucket")
   }
 
-  test("rollingAggSkewed: monster key matches and slices; Auto routes both ways") {
+  test("rollingAggSkewed: monster key matches the plain plan and slices") {
     val big = spark.range(30000).select(
       when(col("id") % 5 < 3, lit(7L)).otherwise(col("id") % 97).as("k"),
       timestamp_millis(lit(1700000000000L) + col("id") * 1000L).as("ts"),
@@ -688,18 +688,7 @@ class WindowedSpec extends AnyFunSuite {
     }
     assert(winParts.contains(2),
       s"the rolling frame must partition by (key, bucket), got $winParts")
-    assert(asSet(Windowed.rollingAggAuto(big, "k", "ts", "v", 5, "tie"))
-      == want, "routed front door must agree on the monster key")
-    val uniform = spark.range(4000).select((col("id") % 211).as("k"),
-      timestamp_millis(lit(1700000000000L) + col("id") * 1000L).as("ts"),
-      col("id").as("tie"), (col("id") % 23).cast("double").as("v"))
-    val plain = Windowed.rollingAggAuto(uniform, "k", "ts", "v", 5, "tie")
-    plain.collect()
-    val plainParts = PlanWalk.nodes(plain).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec =>
-        w.partitionSpec.length
-    }
-    assert(plainParts.nonEmpty && plainParts.forall(_ == 1),
-      "well-distributed keys stay on the single-shuffle plain plan")
+    assert(asSet(Windowed.rollingAggSkewed(big, "k", "ts", "v", 5, "tie"))
+      == want, "the default bucket count must agree on the monster key")
   }
 }
