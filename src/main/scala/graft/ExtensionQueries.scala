@@ -584,10 +584,9 @@ object ExtensionQueries {
       det(graft.operators.Temporal.timeWeightedAvgSkewed(events(s, dir),
         "user_id", "ts", "value", tieCol = "event_id", numBuckets = 8))),
 
-    // the TWA job declared as YAML (r17): compiles through
-    // timeWeightedAvgAuto with the skew share set low enough that the
-    // probe fires on the fixture — THIRD execution path (config ->
-    // probe -> bucketed plan) on the q_events_twa oracle text
+    // the TWA job declared as YAML (r17): the skew mapping selects
+    // timeWeightedAvgSkewed at 8 buckets — THIRD execution path
+    // (config -> bucketed plan) on the q_events_twa oracle text
     "q_events_twa_config" -> ((s, dir) =>
       det(graft.plans.CurationCompiler.compileEventsTwaYaml(
         """events_twa:
@@ -595,7 +594,7 @@ object ExtensionQueries {
           |  ts_col: ts
           |  value_col: value
           |  tie_col: event_id
-          |  skew: {share: 0.001, num_buckets: 8}
+          |  skew: {num_buckets: 8}
           |""".stripMargin,
         events(s, dir)))),
 
@@ -2516,13 +2515,15 @@ object ExtensionQueries {
     // (the r15 plan-literal-map lookup was a linear key scan per
     // token; the kernel emits vocab ids directly, 5.5 s → 0.51 s at
     // sf0.1). Same posexplode grading shape as _pieces (no array
-    // columns in graded output — SURVEY §7.5 #12); the Scala API
-    // still returns (doc_id, token_ids array<long>).
+    // columns in graded output — SURVEY §7.5 #12), outer + pos filter
+    // for the same reason: the kernel runs once per document; the
+    // Scala API still returns (doc_id, token_ids array<long>).
     "q_text_bpe_bytes_ids" -> ((s, dir) =>
       det(graft.operators.TextStats.encodeBpeBytesIds(docs(s, dir), "doc_id",
         "text", ByteBpeFixtureMerges)
         .select(col("doc_id"),
-          posexplode(col("token_ids")).as(Seq("pos", "token_id")))
+          posexplode_outer(col("token_ids")).as(Seq("pos", "token_id")))
+        .filter(col("pos").isNotNull)
         .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
           col("token_id")))),
 
@@ -2561,13 +2562,15 @@ object ExtensionQueries {
     // generated greedy-by-rank recursive-CTE replay as the 10k row.
     // What it prices: byteBpeIds under a production-size rank table
     // where ASCII tail pairs actually FIRE (deeper greedy loops than
-    // the 10k row's non-firing high-byte tail).
+    // the 10k row's non-firing high-byte tail). Outer posexplode +
+    // pos filter, as in _pieces: the kernel runs once per document.
     "q_text_bpe_kernel_50k" -> ((s, dir) =>
       det(docs(s, dir).select(col("doc_id"),
         graft.functions.ByteBpeEncode.byteBpeIds(col("text"),
           kernelMerges50k(s, dir)).as("token_ids"))
         .select(col("doc_id"),
-          posexplode(col("token_ids")).as(Seq("pos", "token_id")))
+          posexplode_outer(col("token_ids")).as(Seq("pos", "token_id")))
+        .filter(col("pos").isNotNull)
         .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
           col("token_id")))),
 
@@ -2852,11 +2855,10 @@ object ExtensionQueries {
         countDistinct(col("session_start")).as("n_purchase_sessions")))
     }),
 
-    // the SAME composition declared as YAML with the skew mapping set
-    // low enough that the probe fires on the fixture: the hardened
-    // (key, ts-bucket) as-of + sessionize paths compile from config
-    // and grade against the IDENTICAL q_pipeline_events oracle text —
-    // the no-drift row for the r16 skew config surface
+    // the SAME composition declared as YAML with the skew mapping:
+    // the hardened (key, ts-bucket) as-of + sessionize paths compile
+    // from config and grade against the IDENTICAL q_pipeline_events
+    // oracle text — the no-drift row for the r16 skew config surface
     "q_pipeline_events_skew_config" -> ((s, dir) =>
       det(graft.plans.CurationCompiler.compileEventsYaml(
         """events_analytics:
@@ -2864,7 +2866,7 @@ object ExtensionQueries {
           |  ts_col: ts
           |  enrich: {left_type: purchase, right_type: view, value_col: value}
           |  sessions: {gap_seconds: 7200}
-          |  skew: {share: 0.001, num_buckets: 8}
+          |  skew: {num_buckets: 8}
           |""".stripMargin,
         events(s, dir)))),
 
@@ -2907,9 +2909,10 @@ object ExtensionQueries {
         "user_id", "ts", "value", nTiles = 5, vBuckets = 8, kBuckets = 8))),
 
     // the YAML-declared RFM job (r17): THIRD execution path on the
-    // q_events_rfm oracle text — max_plain_keys: 1 forces the config
-    // through rfmCardAuto's SHARDED route, so the row grades the
-    // config surface AND the routed billion-key plan in one
+    // q_events_rfm oracle text — the config compiles to rfmCard, whose
+    // stats pass counts the fixture's keys and takes the plain
+    // three-ntile plan (the sharded ranks are graded by
+    // q_events_rfm_sharded and the q_events_rfm_strkey* rows)
     "q_events_rfm_config" -> ((s, dir) =>
       det(graft.plans.CurationCompiler.compileEventsRfmYaml(
         """events_rfm:
@@ -2917,7 +2920,6 @@ object ExtensionQueries {
           |  ts_col: ts
           |  value_col: value
           |  n_tiles: 5
-          |  max_plain_keys: 1
           |""".stripMargin,
         events(s, dir)))),
 
@@ -2925,8 +2927,9 @@ object ExtensionQueries {
     // ids are the COMMON billion-key case and used to fall back to the
     // single-task ntile plan): FOURTH path on the q_events_rfm shape —
     // a key whose BINARY order differs from numeric order ("u10" <
-    // "u2"), ranked through the order-preserving 6-byte UTF-8 prefix
-    // geometry; the oracle recomputes ntile with VARCHAR tie-breaks
+    // "u2"), split into key cells at sampled boundary keys (bucket =
+    // count of boundary strings <= key, monotone in the binary order);
+    // the oracle recomputes ntile with VARCHAR tie-breaks
     "q_events_rfm_strkey" -> ((s, dir) =>
       det(graft.operators.Windowed.rfmCardSharded(
         events(s, dir).withColumn("user_key",
@@ -2935,11 +2938,11 @@ object ExtensionQueries {
 
     // the PREFIXED string-key card (r19, VERDICT r18 #1): real id
     // schemes share a long literal prefix ('customer_…', 'ORD-2024-…')
-    // — 9 shared bytes here, past the 6-byte rank window, the regime
-    // that used to collapse every key into sub-bucket 0 and re-create
-    // the single-task tie window; the LCP strip ranks the bytes AFTER
-    // the population's common prefix, and the oracle re-derives ntile
-    // under VARCHAR collation over the same prefixed key
+    // — 9 shared bytes here, the regime that collapsed every key into
+    // one cell under the earlier byte-rank geometries; boundary keys
+    // are whole sampled strings, so the shared prefix moves no cell
+    // cut, and the oracle re-derives ntile under VARCHAR collation
+    // over the same prefixed key
     "q_events_rfm_strkey_prefixed" -> ((s, dir) =>
       det(graft.operators.Windowed.rfmCardSharded(
         events(s, dir).withColumn("user_key",
@@ -9308,12 +9311,11 @@ object ExtensionQueries {
     .updated("q_chat_dedup_skewed", oracleSqlBase("q_chat_dedup"))
     .updated("q_pref_dedup_skewed", oracleSqlBase("q_pref_dedup"))
     // the YAML-declared TWA job (r17): third execution path (config
-    // -> probe -> bucketed plan) on the q_events_twa oracle text
+    // -> bucketed plan) on the q_events_twa oracle text
     .updated("q_events_twa_config", oracleSqlBase("q_events_twa"))
     // the billion-key sharded-rank RFM card (r17): second execution
     // path on the q_events_rfm oracle text; the YAML-declared job
-    // (routed through rfmCardAuto with a forced sharded threshold) is
-    // the third
+    // (compiled to rfmCard) is the third
     .updated("q_events_rfm_sharded", oracleSqlBase("q_events_rfm"))
     .updated("q_events_rfm_config", oracleSqlBase("q_events_rfm"))
     // the YAML-declared production-tokenizer budget (r17): the config

@@ -9,7 +9,10 @@ import org.apache.spark.sql.SparkSession
  * execution) and print every Spark job it launches — start offset,
  * duration, task count, description. Separates "many tiny driver-action
  * jobs" from "one big job" from "driver-side planning gaps" (time
- * between jobs) without the UI.
+ * between jobs) without the UI. Run 0 is the JVM's first (cold)
+ * construction, so one-time per-JVM work shows up there; runs
+ * 1..repeat are warm. Each run's total splits out the jobs launched
+ * during construction.
  *
  * Usage: runMain graft.JobProfile <query> [repeat]
  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in graft.Bench.
@@ -34,11 +37,6 @@ object JobProfile {
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
-
-    // warmup (codegen/JIT), unmeasured
-    try org.apache.spark.sql.GraftColumnBridge
-      .withoutTopLevelSort(fn(spark, sfDir)).queryExecution.toRdd.count()
-    catch { case _: Throwable => () }
 
     final case class Job(id: Int, desc: String, start: Long,
                          var end: Long = -1L, var tasks: Int = 0,
@@ -68,18 +66,22 @@ object JobProfile {
         }
     }
     spark.sparkContext.addSparkListener(listener)
-    for (r <- 1 to repeat) {
+    // run 0 is the cold run (first construction in the JVM: codegen,
+    // JIT and any per-JVM one-time work); runs 1..repeat are warm
+    for (r <- 0 to repeat) {
       jobs.synchronized(jobs.clear())
       System.gc()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tCons = System.nanoTime()
+      val consEndMs = System.currentTimeMillis()
       val n = org.apache.spark.sql.GraftColumnBridge
         .withoutTopLevelSort(df).queryExecution.toRdd.count()
       val tEnd = System.nanoTime()
       Thread.sleep(300) // let the listener bus drain
       val base = jobs.values.headOption.map(_.start).getOrElse(0L)
-      println(f"== $name run $r: construction ${(tCons - t0) / 1e9}%.3f s, " +
+      println(f"== $name run $r${if (r == 0) " (cold)" else ""}: " +
+        f"construction ${(tCons - t0) / 1e9}%.3f s, " +
         f"execution ${(tEnd - tCons) / 1e9}%.3f s, rows $n")
       var prevEnd = base
       jobs.values.toSeq.sortBy(_.start).foreach { j =>
@@ -89,7 +91,8 @@ object JobProfile {
           f"dur ${(j.end - j.start) / 1000.0}%7.2fs gap $gap%6.2fs " +
           f"stages ${j.stages}%2d tasks ${j.tasks}%4d  ${j.desc.take(80)}")
       }
-      println(f"  total jobs ${jobs.size}, job time " +
+      println(f"  total jobs ${jobs.size} (construction " +
+        f"${jobs.values.count(_.start <= consEndMs)}), job time " +
         f"${jobs.values.map(j => j.end - j.start).sum / 1000.0}%.2f s")
     }
     spark.stop()

@@ -29,10 +29,9 @@ import org.apache.spark.sql.functions._
  * Skewed keys land on one task like any per-key window; the scale-out
  * for monster keys is [[asofJoinSkewed]] — range-partitioning
  * (key, ts-bucket) with a boundary-carry pass over the same union
- * layout — which the events config's skew mapping picks after a
- * heavy-key probe ([[graft.plans.KeyProbes.heavyKeyProbeCached]]);
- * AQE cannot: its skew-join splitting only rewrites join operators it
- * knows.
+ * layout — which the events config picks when it declares a `skew`
+ * mapping; AQE cannot: its skew-join splitting only rewrites join
+ * operators it knows.
  */
 object Temporal {
 
@@ -171,8 +170,8 @@ object Temporal {
    * Three shuffles total — (key, bucket) for the window+join, the
    * tiny carry aggregate, the tiny carry window — versus one for
    * [[asofJoin]]: worth it exactly when a key is big enough to
-   * serialize, which is why the events config's skew mapping
-   * routes here only on a positive heavy-key probe. AQE never fixes
+   * serialize, which is why the events config takes this plan only
+   * when it declares a `skew` mapping. AQE never fixes
    * this case by itself: its skew-join splitting rewrites only the
    * join operators it knows, and a window over a skewed exchange runs
    * as-is.
@@ -201,8 +200,11 @@ object Temporal {
 
     // equal-width time buckets over the global span: one 1-row
     // aggregate; every non-NULL ts lands in [0, numBuckets-1]
-    val span = u.agg(min(unix_micros(col("__ts"))).as("lo"),
-      max(unix_micros(col("__ts"))).as("hi")).head()
+    val span = JobNames.named(left.sparkSession,
+        "graft:Temporal.asofJoinSkewed.span") {
+      u.agg(min(unix_micros(col("__ts"))).as("lo"),
+        max(unix_micros(col("__ts"))).as("hi")).head()
+    }
     val (lo, hi) =
       if (span.isNullAt(0)) (0L, 0L) else (span.getLong(0), span.getLong(1))
     val width = math.max(1L, (hi - lo) / numBuckets + 1L)
@@ -346,8 +348,11 @@ object Temporal {
         col(valueCol).isNotNull)
       .select(col(keyCol).as("__k"), col(tsCol).cast("timestamp").as("__ts"),
         col(valueCol).as("__v"), col(tieCol).as("__tie"))
-    val span = e.agg(min(unix_micros(col("__ts"))).as("lo"),
-      max(unix_micros(col("__ts"))).as("hi")).head()
+    val span = JobNames.named(log.sparkSession,
+        "graft:Temporal.timeWeightedAvgSkewed.span") {
+      e.agg(min(unix_micros(col("__ts"))).as("lo"),
+        max(unix_micros(col("__ts"))).as("hi")).head()
+    }
     val (lo, hi) =
       if (span.isNullAt(0)) (0L, 0L) else (span.getLong(0), span.getLong(1))
     val width = math.max(1L, (hi - lo) / numBuckets + 1L)
@@ -381,24 +386,6 @@ object Temporal {
       .select(col("__k").as(keyCol), col("twa"), col("span_sec"),
         col("n_points"))
   }
-
-  /**
-   * Routed time-weighted average — the last member of the skew family
-   * to get its Auto front door (VERDICT r16 #4): sampled+memoized
-   * heavy-key probe, [[timeWeightedAvgSkewed]] on a hit,
-   * [[timeWeightedAvg]] otherwise; `skewShare = None` pins the plain
-   * plan. No type gate needed: BOTH execution paths order and bucket
-   * by `cast(ts as timestamp)`, so bucket order always equals the
-   * plain window's sort order.
-   */
-  def timeWeightedAvgAuto(log: DataFrame, keyCol: String, tsCol: String,
-                          valueCol: String, tieCol: String,
-                          skewShare: Option[Double] = Some(0.25),
-                          numBuckets: Int = 64): DataFrame =
-    if (skewShare.exists(s =>
-      graft.plans.KeyProbes.heavyKeyProbeCached(log, keyCol, s)))
-      timeWeightedAvgSkewed(log, keyCol, tsCol, valueCol, tieCol, numBuckets)
-    else timeWeightedAvg(log, keyCol, tsCol, valueCol, tieCol)
 
   /**
    * Resample-with-forward-fill (LOCF): regularize an irregular

@@ -110,8 +110,11 @@ object Windowed {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
     val e = events.select(col(userCol).as("__k"),
       col(tsCol).cast("timestamp").as("__ts"))
-    val span = e.agg(min(unix_micros(col("__ts"))).as("lo"),
-      max(unix_micros(col("__ts"))).as("hi")).head()
+    val span = JobNames.named(events.sparkSession,
+        "graft:Windowed.sessionizeSkewed.span") {
+      e.agg(min(unix_micros(col("__ts"))).as("lo"),
+        max(unix_micros(col("__ts"))).as("hi")).head()
+    }
     val (lo, hi) =
       if (span.isNullAt(0)) (0L, 0L) else (span.getLong(0), span.getLong(1))
     val gapUs = math.multiplyExact(gapSeconds, 1000000L)
@@ -158,23 +161,6 @@ object Windowed {
       .select(col("__k").as(userCol), col("__start").as("session_start"),
         col("__end").as("session_end"), col("__n").cast("long").as("n_events"))
   }
-
-  /**
-   * Routed sessionization: probe the key distribution once
-   * ([[graft.plans.KeyProbes.heavyKeyProbeCached]] — sampled,
-   * exact fallback near the threshold) and pick [[sessionizeSkewed]]
-   * when a monster key would serialize the per-key window,
-   * [[sessionizeBatch]] otherwise (its single shuffle is cheaper on
-   * well-distributed keys). `skewShare = None` pins the batch plan.
-   */
-  def sessionizeAuto(events: DataFrame, userCol: String, tsCol: String,
-                     gapSeconds: Long,
-                     skewShare: Option[Double] = Some(0.25),
-                     numBuckets: Int = 64): DataFrame =
-    if (skewShare.exists(s =>
-      graft.plans.KeyProbes.heavyKeyProbeCached(events, userCol, s)))
-      sessionizeSkewed(events, userCol, tsCol, gapSeconds, numBuckets)
-    else sessionizeBatch(events, userCol, tsCol, gapSeconds)
 
   /**
    * Session STATISTICS card — the corpus-level summary over
@@ -584,38 +570,28 @@ object Windowed {
    * (value sum, round-2) per key, each scored into `nTiles` buckets
    * with `ntile` (recency ranked ASCENDING — most recent = tile 1;
    * frequency/monetary DESCENDING — biggest = tile 1; key ASC
-   * tie-breaks make every tile deterministic). The corpus max rides
-   * a broadcast 1-row cross join, the standard scalar-frame shape.
+   * tie-breaks make every tile deterministic).
    *
-   * Scale note: the card is KEY-cardinality (one row per user), and
-   * the three ntile windows are global single-partition ranks over
-   * that frame — fine to hundreds of millions of keys; at billions,
-   * swap ntile for the sharded-rank decomposition
-   * ([[graft.operators.Sampling]]'s interleave pattern) the same way
-   * the exact-N sampler does.
+   * One front door, one construction job: the per-key frame is
+   * `localCheckpoint`ed lazily and ONE stats pass over it yields the
+   * corpus max (recency's anchor, a plan literal) and the exact key
+   * count n. The count picks the plan: up to [[RfmPlainMaxKeys]] keys
+   * (or for a key that is neither numeric nor string) the three
+   * `ntile` windows — global single-partition ranks over the
+   * key-cardinality frame, the cheapest plan below ~1e8 keys — and
+   * past it the sharded ranks of [[rfmCardSharded]], which never
+   * single-task the frame. Both plans are exact and graded on the
+   * same oracle text; the count is a number the sharded path needs
+   * anyway, so choosing costs no extra job.
    */
   def rfmCard(events: DataFrame, keyCol: String, tsCol: String,
-              valueCol: String, nTiles: Int = 5): DataFrame = {
-    require(nTiles >= 2, "need at least two tiles")
-    val per = rfmPerKey(events, keyCol, tsCol, valueCol)
-    // corpus max as an unpartitioned window over the SAME key-
-    // cardinality frame — a scalar-frame cross join would re-evaluate
-    // `per` (the self-join trap), and the ntile windows already pay
-    // the single-partition pass
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val wR = Window.orderBy(col("recency_sec").asc, col(keyCol).asc)
-    val wF = Window.orderBy(col("frequency").desc, col(keyCol).asc)
-    val wM = Window.orderBy(col("monetary").desc, col(keyCol).asc)
-    per
-      .withColumn("recency_sec", round(max(col("__last")).over(wAll)
-        .cast("double") - col("__last").cast("double"), 6))
-      .select(col(keyCol), col("recency_sec"), col("frequency"),
-        col("monetary"),
-        ntile(nTiles).over(wR).as("r_score"),
-        ntile(nTiles).over(wF).as("f_score"),
-        ntile(nTiles).over(wM).as("m_score"))
-  }
+              valueCol: String, nTiles: Int = 5): DataFrame =
+    rfmCardWith(events, keyCol, tsCol, valueCol, nTiles, RfmPlainMaxKeys)
+
+  /** Key count up to which [[rfmCard]] ranks with the three global
+    * `ntile` windows (one single-partition sort of the key-cardinality
+    * frame stays cheap to hundreds of millions of keys). */
+  val RfmPlainMaxKeys: Long = 100000000L
 
   /** The per-key RFM aggregate — ONE definition shared by [[rfmCard]]
     * and [[rfmCardSharded]] (two execution paths, one oracle text:
@@ -663,11 +639,11 @@ object Windowed {
    * plain sort puts them (asc: NULL first, NaN last; desc: NaN first,
    * NULL last — Spark's asc_nulls_first/desc_nulls_last defaults).
    *
-   * Cost (why the plain card stays the default below ~1e8 keys): the
-   * per-key frame is evaluated once more for the scalar stats row
-   * (bounds + N), and each metric pays a (v, kb) exchange + small
-   * D-frame shuffles instead of one single-partition sort.
-   * [[rfmCardAuto]] routes on an estimated key cardinality.
+   * Cost (why [[rfmCard]] keeps the plain plan up to
+   * [[RfmPlainMaxKeys]] keys): each metric pays a (v, kb) exchange +
+   * small D-frame shuffles instead of one single-partition sort.
+   * [[rfmCard]] takes this plan past that key count; calling it
+   * directly forces it at any count.
    *
    * `keyCol` may be NUMERIC (cast to double — the sub-bucket geometry
    * over its value range) or STRING (r18, VERDICT r17 #1 — billion-key
@@ -689,62 +665,90 @@ object Windowed {
    * three driver actions over `per`, and without the checkpoint each
    * re-ran the events-scale groupBy from scratch — two avoidable full
    * scans+shuffles of the raw events at 100 TB. The checkpoint
-   * materializes the KEY-cardinality frame once; every probe and the
-   * card read its blocks (block lifetime follows the RDD — the
-   * ContextCleaner drops them when the card frame is collected and
-   * released).
+   * materializes the KEY-cardinality frame once; the stats pass, the
+   * boundary sample and the card read its blocks (block lifetime
+   * follows the RDD — the ContextCleaner drops them when the card
+   * frame is collected and released).
    */
   def rfmCardSharded(events: DataFrame, keyCol: String, tsCol: String,
                      valueCol: String, nTiles: Int = 5,
-                     vBuckets: Int = 256, kBuckets: Int = 256): DataFrame = {
+                     vBuckets: Int = 256, kBuckets: Int = 256): DataFrame =
+    rfmCardWith(events, keyCol, tsCol, valueCol, nTiles, plainMaxKeys = -1L,
+      vBuckets, kBuckets)
+
+  /** The RFM card behind [[rfmCard]] and [[rfmCardSharded]]: the plain
+    * three-`ntile` plan when the exact key count n is at most
+    * `plainMaxKeys` or the key is neither numeric nor string, the
+    * sharded ranks otherwise. `plainMaxKeys < 0` forces the sharded
+    * ranks and rejects any other key type before a job runs. */
+  private[graft] def rfmCardWith(events: DataFrame, keyCol: String,
+                                 tsCol: String, valueCol: String, nTiles: Int,
+                                 plainMaxKeys: Long, vBuckets: Int = 256,
+                                 kBuckets: Int = 256): DataFrame = {
     require(nTiles >= 2, "need at least two tiles")
     require(vBuckets >= 2 && kBuckets >= 2, "need at least two buckets")
     val keyType = events.schema.fields.find(_.name == keyCol)
       .getOrElse(throw new IllegalArgumentException(s"no column '$keyCol'"))
       .dataType
     val keyIsString = keyType == org.apache.spark.sql.types.StringType
-    if (!keyIsString &&
-        !keyType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+    val keyIsNumeric =
+      keyType.isInstanceOf[org.apache.spark.sql.types.NumericType]
+    if (plainMaxKeys < 0 && !keyIsString && !keyIsNumeric)
       throw new IllegalArgumentException(
         s"'$keyCol' must be numeric or string for the sharded rank " +
           s"(got $keyType); use rfmCard for other key types")
-    // KEY-cardinality frame, materialized ONCE (r20, VERDICT r19 #2):
-    // the stats head(), the string-key boundary sample and the card
-    // plan are three separate driver actions, and an unpersisted `per`
-    // re-ran the events-scale groupBy under each of them. LAZY (r21):
-    // the eager form ran a dedicated materialization job whose work the
-    // stats pass repeats anyway — `eager = false` folds the checkpoint
-    // into the stats action (first job over the RDD stores the blocks),
-    // one events-scale aggregation total, one fewer Spark job.
-    val per = rfmPerKey(events, keyCol, tsCol, valueCol)
-      .localCheckpoint(eager = false)
-    // ONE scalar pass for every bound the bucket geometry needs (the
-    // plain card's corpus-max window would be a single-partition pass
-    // over the very frame this method exists to never single-task).
-    // NaN-safe min/max for the double metric: max() returns NaN if any
-    // NaN is present, which would poison the bucket width. String keys
-    // need no numeric bounds — their cells cut at sampled boundary
-    // KEYS, not at a rank range.
-    val kMinCol = if (keyIsString) min(lit(null).cast("double"))
-                  else min(col(keyCol).cast("double"))
-    val kMaxCol = if (keyIsString) max(lit(null).cast("double"))
-                  else max(col(keyCol).cast("double"))
-    val st = per.agg(
-      max(col("__last")).cast("double").as("maxLast"),
-      min(col("__last")).cast("double").as("minLast"),
-      count(lit(1)).as("n"),
-      kMinCol.as("kLo"),
-      kMaxCol.as("kHi"),
-      min(col("frequency")).cast("double").as("fLo"),
-      max(col("frequency")).cast("double").as("fHi"),
-      min(when(!isnan(col("monetary")), col("monetary"))).as("mLo"),
-      max(when(!isnan(col("monetary")), col("monetary"))).as("mHi")).head()
+    // ONE scalar pass for the corpus max, the exact key count that
+    // picks the plan, and every bound the sharded bucket geometry
+    // needs. NaN-safe min/max for the double metric: max() returns NaN
+    // if any NaN is present, which would poison the bucket width. Only
+    // numeric keys need numeric bounds — string keys cut at sampled
+    // boundary KEYS, not at a rank range.
+    val kMinCol = if (keyIsNumeric) min(col(keyCol).cast("double"))
+                  else min(lit(null).cast("double"))
+    val kMaxCol = if (keyIsNumeric) max(col(keyCol).cast("double"))
+                  else max(lit(null).cast("double"))
+    val (per, st) = JobNames.named(events.sparkSession,
+        "graft:Windowed.rfmCard.stats") {
+      // KEY-cardinality frame, materialized ONCE (r20, VERDICT r19 #2):
+      // the stats head(), the string-key boundary sample and the card
+      // plan are three separate driver actions, and an unpersisted
+      // `per` re-ran the events-scale groupBy under each of them. LAZY
+      // (r21): `eager = false` folds the checkpoint into the stats
+      // action (the first job over the RDD stores the blocks) — one
+      // events-scale aggregation total, no dedicated checkpoint job.
+      val per = rfmPerKey(events, keyCol, tsCol, valueCol)
+        .localCheckpoint(eager = false)
+      (per, per.agg(
+        max(col("__last")).cast("double").as("maxLast"),
+        min(col("__last")).cast("double").as("minLast"),
+        count(lit(1)).as("n"),
+        kMinCol.as("kLo"),
+        kMaxCol.as("kHi"),
+        min(col("frequency")).cast("double").as("fLo"),
+        max(col("frequency")).cast("double").as("fHi"),
+        min(when(!isnan(col("monetary")), col("monetary"))).as("mLo"),
+        max(when(!isnan(col("monetary")), col("monetary"))).as("mHi")).head())
+    }
     val n = st.getLong(2)
     if (n == 0L)
       return per.select(col(keyCol), lit(null).cast("double").as("recency_sec"),
         col("frequency"), col("monetary"), lit(0).as("r_score"),
         lit(0).as("f_score"), lit(0).as("m_score")).limit(0)
+    // recency anchors on the stats pass's corpus max, a plan literal:
+    // no unpartitioned max window, no scalar-frame cross join
     val maxLast = st.getDouble(0)
+    val card0 = per.withColumn("recency_sec",
+      round(lit(maxLast) - col("__last").cast("double"), 6))
+    if (n <= plainMaxKeys || !(keyIsString || keyIsNumeric)) {
+      val wR = Window.orderBy(col("recency_sec").asc, col(keyCol).asc)
+      val wF = Window.orderBy(col("frequency").desc, col(keyCol).asc)
+      val wM = Window.orderBy(col("monetary").desc, col(keyCol).asc)
+      return card0.select(col(keyCol), col("recency_sec"), col("frequency"),
+        col("monetary"),
+        ntile(nTiles).over(wR).as("r_score"),
+        ntile(nTiles).over(wF).as("f_score"),
+        ntile(nTiles).over(wM).as("m_score"))
+    }
     def bound(i: Int, d: Double): Double = if (st.isNullAt(i)) d else st.getDouble(i)
     // Key sub-bucket geometry (computed ONCE — the same cell split
     // serves all three metrics): numeric keys bucket equi-width over
@@ -757,8 +761,6 @@ object Windowed {
         stringKeyBoundaryBuckets(per, col(keyCol), kBuckets)
       else subBucketIndex(col(keyCol).cast("double"), bound(3, 0.0),
         bound(4, 1.0), kBuckets)
-    val card0 = per.withColumn("recency_sec",
-      round(lit(maxLast) - col("__last").cast("double"), 6))
     // Each metric's ntile is a pure function of (metric value, key), so
     // the three passes run over NARROW (key, value) projections of the
     // checkpointed frame and join back once on the (unique, non-null)
@@ -959,47 +961,6 @@ object Windowed {
           .otherwise((expr(s"(__rank - 1 - ${cut}L) div ${qSafe}L") +
             lit(r + 1)).cast("int")))
       .select(df.columns.map(col) :+ col(outCol): _*)
-  }
-
-  /**
-   * Routed RFM card: [[rfmCardSharded]] when the estimated key
-   * cardinality exceeds `maxPlainKeys`, the plain three-window
-   * [[rfmCard]] otherwise — cardinality, not key skew, is what breaks
-   * the plain plan here (the card frame is one row PER KEY, so a
-   * monster key does not make it bigger; a billion distinct keys do).
-   * Numeric AND string keys both route (r18 — string/UUID ids are the
-   * common billion-key case, via [[stringKeyBoundaryBuckets]]); other key types
-   * stay on the plain plan.
-   *
-   * The probe (r19, VERDICT r18 #2: the full-frame
-   * `approx_count_distinct` was a complete column scan per routing
-   * decision) follows the skew paths' convention: pass
-   * `knownKeys` when the caller/catalog knows the cardinality (no
-   * data touched), else a sampled+memoized probe
-   * ([[graft.plans.KeyProbes.distinctKeysProbeCached]]) sketches
-   * a ~2% deterministic sample once per JVM. Routing is a wall-clock
-   * choice — both plans are exact — so a boundary miss is perf-only
-   * (and the probe's bias runs toward the sharded plan, the safe
-   * direction at scale).
-   */
-  def rfmCardAuto(events: DataFrame, keyCol: String, tsCol: String,
-                  valueCol: String, nTiles: Int = 5,
-                  maxPlainKeys: Long = 100000000L,
-                  vBuckets: Int = 256, kBuckets: Int = 256,
-                  knownKeys: Option[Long] = None): DataFrame = {
-    val routableKey = events.schema.fields.find(_.name == keyCol)
-      .exists(f =>
-        f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
-          f.dataType == org.apache.spark.sql.types.StringType)
-    lazy val manyKeys = knownKeys match {
-      case Some(k) => k > maxPlainKeys
-      case None => graft.plans.KeyProbes.distinctKeysProbeCached(
-        events, keyCol, threshold = math.min(maxPlainKeys, Long.MaxValue - 1) + 1)
-    }
-    if (routableKey && manyKeys)
-      rfmCardSharded(events, keyCol, tsCol, valueCol, nTiles, vBuckets,
-        kBuckets)
-    else rfmCard(events, keyCol, tsCol, valueCol, nTiles)
   }
 
   /** Tumbling time-bucket aggregation: count + sum per (bucket, key).

@@ -425,30 +425,23 @@ object CurationCompiler {
     val rightSide = events.filter(col(cfg.typeCol) === cfg.rightType)
       .groupBy(col(cfg.userCol), col(cfg.tsCol))
       .agg(max_by(col(cfg.valueCol), col(cfg.idCol)).as("view_value"))
-    // skew mapping set -> probe the left side's keys once (sampled,
-    // memoized, KeyProbes), hardened (key, ts-bucket) plans on a
-    // hit; identical output either way (the skewed operators are
+    // the skew mapping selects the (key, ts-bucket) + boundary-carry
+    // plans; identical output either way (the skewed operators are
     // graded on the same oracle texts as the plain ones)
-    val skewHit = cfg.skewShare.exists(s =>
-      graft.plans.KeyProbes.heavyKeyProbeCached(leftSide,
-        cfg.userCol, s))
-    val enriched =
-      if (skewHit)
-        graft.operators.Temporal.asofJoinSkewed(leftSide, rightSide,
+    val (enriched, sessions) = cfg.skewBuckets match {
+      case Some(n) =>
+        (graft.operators.Temporal.asofJoinSkewed(leftSide, rightSide,
           cfg.userCol, cfg.tsCol, Seq("view_value"),
-          toleranceSeconds = cfg.toleranceSeconds,
-          numBuckets = cfg.skewNumBuckets)
-      else graft.operators.Temporal.asofJoin(leftSide, rightSide,
-        cfg.userCol, cfg.tsCol, Seq("view_value"),
-        toleranceSeconds = cfg.toleranceSeconds)
-    val sessions =
-      if (cfg.skewShare.isDefined)
-        graft.operators.Windowed.sessionizeAuto(events, cfg.userCol,
-          cfg.tsCol, cfg.sessionGapSeconds, cfg.skewShare,
-          cfg.skewNumBuckets)
-      else graft.operators.Windowed.sessionizeBatch(events,
-        cfg.userCol, cfg.tsCol, cfg.sessionGapSeconds,
-        tieBreakCol = Some(cfg.idCol))
+          toleranceSeconds = cfg.toleranceSeconds, numBuckets = n),
+          graft.operators.Windowed.sessionizeSkewed(events, cfg.userCol,
+            cfg.tsCol, cfg.sessionGapSeconds, n))
+      case None =>
+        (graft.operators.Temporal.asofJoin(leftSide, rightSide,
+          cfg.userCol, cfg.tsCol, Seq("view_value"),
+          toleranceSeconds = cfg.toleranceSeconds),
+          graft.operators.Windowed.sessionizeBatch(events, cfg.userCol,
+            cfg.tsCol, cfg.sessionGapSeconds, tieBreakCol = Some(cfg.idCol)))
+    }
     val inSession = graft.operators.Temporal.rangeJoin(enriched, sessions,
       cfg.tsCol, "session_start", "session_end",
       bucketWidth = math.max(cfg.sessionGapSeconds, 86400L).toDouble,
@@ -466,16 +459,20 @@ object CurationCompiler {
 
   /**
    * Compile an [[graft.config.EventsTwaConfig]] — the time-weighted
-   * average job as config (r17): straight delegation to
-   * [[graft.operators.Temporal.timeWeightedAvgAuto]], so a config
-   * user gets the probe-routed (key, ts-bucket) monster-key plan
-   * exactly like the programmatic caller; `skew` omitted pins the
-   * plain per-key window (skewShare = None).
+   * average job as config (r17): the `skew` mapping selects
+   * [[graft.operators.Temporal.timeWeightedAvgSkewed]] at its bucket
+   * count, its absence the plain per-key window
+   * [[graft.operators.Temporal.timeWeightedAvg]] — the same operators a
+   * programmatic caller picks between.
    */
   def compileEventsTwa(cfg: graft.config.EventsTwaConfig,
                        events: DataFrame): DataFrame =
-    graft.operators.Temporal.timeWeightedAvgAuto(events, cfg.userCol,
-      cfg.tsCol, cfg.valueCol, cfg.tieCol, cfg.skewShare, cfg.skewNumBuckets)
+    cfg.skewBuckets match {
+      case Some(n) => graft.operators.Temporal.timeWeightedAvgSkewed(events,
+        cfg.userCol, cfg.tsCol, cfg.valueCol, cfg.tieCol, n)
+      case None => graft.operators.Temporal.timeWeightedAvg(events,
+        cfg.userCol, cfg.tsCol, cfg.valueCol, cfg.tieCol)
+    }
 
   /** [[compileEventsTwa]] straight from YAML. */
   def compileEventsTwaYaml(yaml: String, events: DataFrame): DataFrame =
@@ -484,16 +481,14 @@ object CurationCompiler {
   /**
    * Compile an [[graft.config.EventsRfmConfig]] — the RFM segmentation
    * job as config (r17): straight delegation to
-   * [[graft.operators.Windowed.rfmCardAuto]], so a config user gets
-   * the billion-key sharded-rank routing exactly like the
-   * programmatic caller (`max_plain_keys` is the routing threshold —
-   * the default keeps frames under 100M keys on the plain
-   * three-window plan).
+   * [[graft.operators.Windowed.rfmCard]], which picks the plain or the
+   * sharded-rank plan from the exact key count it measures, so a config
+   * user gets the billion-key plan exactly like the programmatic caller.
    */
   def compileEventsRfm(cfg: graft.config.EventsRfmConfig,
                        events: DataFrame): DataFrame =
-    graft.operators.Windowed.rfmCardAuto(events, cfg.userCol, cfg.tsCol,
-      cfg.valueCol, cfg.nTiles, cfg.maxPlainKeys)
+    graft.operators.Windowed.rfmCard(events, cfg.userCol, cfg.tsCol,
+      cfg.valueCol, cfg.nTiles)
 
   /** [[compileEventsRfm]] straight from YAML. */
   def compileEventsRfmYaml(yaml: String, events: DataFrame): DataFrame =

@@ -408,57 +408,6 @@ object StreamingOps {
       idCol, textCol, langs, minQuality, maxTopBigramRatio)
 
   /**
-   * Language-id projection for a STREAMING document frame — the
-   * incremental twin of the batch `q_text_langid` path. The staged
-   * detector ([[graft.functions.TextFunctions.withDetectedLanguage]])
-   * is a STATELESS two-projection rewrite (no aggregation, no state
-   * store), so it applies to a micro-batch unchanged: decisions are
-   * identical to the batch operator row-for-row (StreamingOpsSpec
-   * asserts this), and the stream needs no watermark for it.
-   */
-  def streamingDetectedLanguage(docs: DataFrame, textCol: String,
-                                out: String = "detected_lang"): DataFrame =
-    graft.functions.TextFunctions.withDetectedLanguage(docs, col(textCol), out)
-
-  /**
-   * TRAINED langid over a streaming frame — the incremental twin of
-   * [[graft.operators.Classifier.withLangid]], for intake pipelines
-   * whose language mix the stopword profiles can't resolve (short
-   * queries, morphology-rich text). The model is trained OFFLINE on a
-   * batch corpus ([[graft.operators.Classifier.trainLangid]]) and
-   * frozen into the stream's plan as weight literals — the
-   * [[streamingScoreAgainstReference]] / [[streamingDsirScore]]
-   * frozen-model contract: a stateless staged projection (char-n-gram
-   * vector → margin array → argmax), no state store, no watermark, and
-   * micro-batch predictions equal the batch operator row-for-row
-   * (StreamingOpsSpec asserts this). Retraining = restart the query
-   * with a new model, exactly like the other frozen-model stages.
-   */
-  def streamingLangid(docs: DataFrame, textCol: String,
-                      model: graft.operators.Classifier.LangidModel,
-                      out: String = "lang_pred"): DataFrame =
-    graft.operators.Classifier.withLangid(docs, textCol, model, out)
-
-  /**
-   * Line-wise correction for a STREAMING intake — the incremental twin
-   * of [[graft.operators.CorpusClean.filterLines]]: the rule chain is a
-   * row-local HOF projection + filter (thresholds and the boilerplate
-   * list are plan literals), so it applies to a micro-batch unchanged —
-   * stateless, no watermark, decisions equal the batch operator
-   * row-for-row (StreamingOpsSpec asserts this). Run it BEFORE
-   * [[streamingQuality]]/[[streamingCorpusClean]] so quality signals
-   * see the corrected text, mirroring the batch composition order.
-   */
-  def streamingFilterLines(docs: DataFrame, textCol: String,
-                           minLineChars: Int = 5, maxUpperRatio: Double = 0.6,
-                           maxDigitRatio: Double = 0.5,
-                           boilerplate: Seq[String] =
-                             graft.operators.CorpusClean.DefaultBoilerplateLines,
-                           maxRemovedShare: Double = 0.5): DataFrame =
-    graft.operators.CorpusClean.filterLines(docs, textCol, minLineChars,
-      maxUpperRatio, maxDigitRatio, boilerplate, maxRemovedShare)
-
-  /**
    * Chat/SFT intake validation + accounting for a STREAMING
    * conversation frame — the incremental twin of
    * [[graft.operators.Chat.validateChat]] + [[graft.operators.Chat.chatStats]]
@@ -637,34 +586,6 @@ object StreamingOps {
     (batch, batchId) =>
       sink(graft.operators.Similarity.semanticDecontaminate(batch, evalSet,
         idCol, vecCol, threshold, tables, planes, dim), batchId)
-
-  /**
-   * Deterministic sampling / split assignment for STREAMING frames —
-   * the intake twins of [[graft.operators.Sampling.hashSample]],
-   * [[graft.operators.Sampling.weightedSample]] and
-   * [[graft.operators.Sampling.assignSplit]]. All three are pure
-   * hash-derived filters/projections (zero state, zero watermark), and
-   * because survival/slice is a function of the ROW KEY alone, a
-   * stream sampled at intake and the same rows sampled later in batch
-   * agree EXACTLY — the property that lets a pipeline downsample on
-   * ingest and still re-derive the decision offline
-   * (StreamingOpsSpec asserts batch-identity row-for-row). Delegating
-   * to the batch operators (not reimplementing) is what makes the
-   * agreement structural rather than coincidental.
-   */
-  def streamingHashSample(docs: DataFrame, keyCol: String,
-                          fraction: Double): DataFrame =
-    graft.operators.Sampling.hashSample(docs, keyCol, fraction)
-
-  /** See [[streamingHashSample]]. */
-  def streamingWeightedSample(docs: DataFrame, keyCol: String,
-                              weight: org.apache.spark.sql.Column): DataFrame =
-    graft.operators.Sampling.weightedSample(docs, keyCol, weight)
-
-  /** See [[streamingHashSample]]. */
-  def streamingAssignSplit(docs: DataFrame, keyCol: String,
-                           splits: Seq[(String, Double)]): DataFrame =
-    graft.operators.Sampling.assignSplit(docs, keyCol, splits)
 
   /**
    * Stateless streaming quality scoring against a FROZEN reference LM —
@@ -877,15 +798,6 @@ object StreamingOps {
         col("window.end").as("window_end"),
         col("n_docs"), col("avg_quality"), col("avg_tokens"))
   }
-
-  /** [[graft.operators.Multimodal.withMediaMeta]] on a stream: the
-    * classification card is a row-local codegen'd byte projection, so
-    * the batch operator IS streaming-safe — media intake triage
-    * (modality/format/dims/rate/bytes) at the door, no decode. The
-    * wrapper exists for discoverability and pins the contract with a
-    * spec. */
-  def streamingMediaIntake(media: DataFrame, binCol: String): DataFrame =
-    graft.operators.Multimodal.withMediaMeta(media, binCol)
 
   /** [[graft.operators.Preference.validatePairs]] +
     * [[graft.operators.Preference.pairStats]] on a stream: both are

@@ -430,33 +430,40 @@ class CurationCompilerSpec extends AnyFunSuite {
       """events_analytics:
         |  enrich: {left_type: purchase, right_type: view}
         |  sessions: {gap_seconds: 7200}
-        |  skew: {share: 0.2, num_buckets: 16}
+        |  skew: {num_buckets: 16}
         |""".stripMargin)
-    assert(cfg.skewShare == Some(0.2) && cfg.skewNumBuckets == 16)
+    assert(cfg.skewBuckets == Some(16))
     assert(graft.config.EventsAnalyticsConfig.fromYaml(
       """events_analytics:
         |  enrich: {left_type: a, right_type: b}
         |  sessions: {gap_seconds: 1}
-        |""".stripMargin).skewShare.isEmpty,
+        |  skew: {}
+        |""".stripMargin).skewBuckets == Some(64),
+      "an empty skew mapping selects the bucketed plans at 64 buckets")
+    assert(graft.config.EventsAnalyticsConfig.fromYaml(
+      """events_analytics:
+        |  enrich: {left_type: a, right_type: b}
+        |  sessions: {gap_seconds: 1}
+        |""".stripMargin).skewBuckets.isEmpty,
       "no skew mapping -> plain plans, byte-identical to r15 behavior")
     intercept[IllegalArgumentException] {
       graft.config.EventsAnalyticsConfig.fromYaml(
         """events_analytics:
           |  enrich: {left_type: a, right_type: b}
           |  sessions: {gap_seconds: 1}
-          |  skew: {share: 1.5}
+          |  skew: {num_buckets: 1}
           |""".stripMargin)
     }
-    // share low enough that the probe fires on the fixture: the
-    // compiled plan must carry (key, bucket)-partitioned windows AND
-    // produce exactly the plain pipeline's rows
+    // the skew mapping selects the plans: the compiled plan must carry
+    // (key, bucket)-partitioned windows AND produce exactly the plain
+    // pipeline's rows
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp"))
     val skewed = CurationCompiler.compileEventsYaml(
       """events_analytics:
         |  enrich: {left_type: purchase, right_type: view, value_col: value}
         |  sessions: {gap_seconds: 7200}
-        |  skew: {share: 0.001, num_buckets: 8}
+        |  skew: {num_buckets: 8}
         |""".stripMargin, events)
     val winParts = PlanWalk.nodes(skewed).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
@@ -533,42 +540,54 @@ class CurationCompilerSpec extends AnyFunSuite {
       "kernel sizing must actually change the packing on the fixture")
   }
 
-  test("events twa config: parsed, routed through the Auto front door, zero drift") {
+  test("events twa config: parsed, skew mapping selects the plan, zero drift") {
     val cfg = graft.config.EventsTwaConfig.fromYaml(
       """events_twa:
         |  value_col: value
-        |  skew: {share: 0.2, num_buckets: 16}
+        |  skew: {num_buckets: 16}
         |""".stripMargin)
     assert(cfg.userCol == "user_id" && cfg.tsCol == "ts" &&
-      cfg.tieCol == "event_id" && cfg.skewShare == Some(0.2) &&
-      cfg.skewNumBuckets == 16)
+      cfg.tieCol == "event_id" && cfg.skewBuckets == Some(16))
     assert(graft.config.EventsTwaConfig.fromYaml(
-      "events_twa: {value_col: value}").skewShare.isEmpty,
-      "no skew mapping -> the plain per-key window plan, unprobed")
+      "events_twa: {value_col: value}").skewBuckets.isEmpty,
+      "no skew mapping -> the plain per-key window plan")
     intercept[IllegalArgumentException] {
       graft.config.EventsTwaConfig.fromYaml(
-        "events_twa: {skew: {share: 1.5}}")
+        "events_twa: {skew: {num_buckets: 1}}")
     }
     intercept[IllegalArgumentException] {
       graft.config.EventsTwaConfig.fromYaml("other_root: {}")
     }
-    // no-drift + routing: with the share set low enough that the probe
-    // fires on the fixture, the compiled plan must carry the
-    // (key, bucket) windows and agree row-for-row with the plain
-    // programmatic operator
+    // unknown keys fail at parse time, naming the key: a retired
+    // routing share, a misspelled option, a skew mapping that is not
+    // a mapping
+    val share = intercept[IllegalArgumentException] {
+      graft.config.EventsTwaConfig.fromYaml(
+        "events_twa: {skew: {share: 0.25, num_buckets: 8}}")
+    }
+    assert(share.getMessage.contains("'share'"), share.getMessage)
+    val typo = intercept[IllegalArgumentException] {
+      graft.config.EventsTwaConfig.fromYaml("events_twa: {valu_col: value}")
+    }
+    assert(typo.getMessage.contains("'valu_col'"), typo.getMessage)
+    intercept[IllegalArgumentException] {
+      graft.config.EventsTwaConfig.fromYaml("events_twa: {skew: 8}")
+    }
+    // no-drift: the skew mapping compiles the (key, bucket) windows,
+    // which agree row-for-row with the plain programmatic operator
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp"))
     val routed = CurationCompiler.compileEventsTwaYaml(
       """events_twa:
         |  value_col: value
-        |  skew: {share: 0.001, num_buckets: 8}
+        |  skew: {num_buckets: 8}
         |""".stripMargin, events)
     val winParts = PlanWalk.nodes(routed).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
         w.partitionSpec.length
     }
     assert(winParts.contains(2),
-      s"low-share twa config must compile (key, bucket) windows, got $winParts")
+      s"skewed twa config must compile (key, bucket) windows, got $winParts")
     val want = graft.operators.Temporal.timeWeightedAvg(events,
       "user_id", "ts", "value", "event_id")
     assert(routed.collect().map(_.toSeq).toSet ==
@@ -1151,53 +1170,142 @@ class CurationCompilerSpec extends AnyFunSuite {
     }
   }
 
-  test("events rfm config: parsed, routed through rfmCardAuto, zero drift") {
+  test("events rfm config: parsed, compiled through rfmCard, zero drift") {
     val cfg = graft.config.EventsRfmConfig.fromYaml(
       """events_rfm:
         |  value_col: value
         |  n_tiles: 4
         |""".stripMargin)
-    assert(cfg.userCol == "user_id" && cfg.tsCol == "ts" &&
-      cfg.nTiles == 4 && cfg.maxPlainKeys == 100000000L)
+    assert(cfg.userCol == "user_id" && cfg.tsCol == "ts" && cfg.nTiles == 4)
     intercept[IllegalArgumentException] {
       graft.config.EventsRfmConfig.fromYaml("events_rfm: {n_tiles: 1}")
     }
     intercept[IllegalArgumentException] {
       graft.config.EventsRfmConfig.fromYaml("other_root: {}")
     }
+    // the retired routing threshold is an unknown key now: loud, named
+    val retired = intercept[IllegalArgumentException] {
+      graft.config.EventsRfmConfig.fromYaml(
+        "events_rfm: {value_col: value, max_plain_keys: 1}")
+    }
+    assert(retired.getMessage.contains("'max_plain_keys'"), retired.getMessage)
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp"))
-    // max_plain_keys: 1 forces the SHARDED route on any frame — the
-    // compiled plan must contain no unpartitioned window, and agree
-    // row-for-row with the plain programmatic card
-    val sharded = CurationCompiler.compileEventsRfmYaml(
-      """events_rfm:
-        |  value_col: value
-        |  max_plain_keys: 1
-        |""".stripMargin, events)
-    val shardedParts = PlanWalk.nodes(sharded).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec =>
-        w.partitionSpec.length
-    }
-    assert(shardedParts.forall(_ >= 1),
-      s"forced-sharded rfm config must plan no unpartitioned window, got $shardedParts")
-    val want = graft.operators.Windowed.rfmCard(events,
-      "user_id", "ts", "value", nTiles = 5)
-    assert(sharded.collect().map(_.toSeq).toSet ==
-      want.collect().map(_.toSeq).toSet,
-      "config-compiled sharded rfm must equal the plain programmatic card")
-    // default threshold -> plain plan (global ntile windows present)
-    val plain = CurationCompiler.compileEventsRfmYaml(
+    // the fixture's key count is far below the threshold: the plain
+    // global-ntile plan, row-for-row equal to the programmatic card
+    // AND to the forced sharded ranks
+    val compiled = CurationCompiler.compileEventsRfmYaml(
       "events_rfm: {value_col: value}", events)
-    val plainParts = PlanWalk.nodes(plain).collect {
+    val parts = PlanWalk.nodes(compiled).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
         w.partitionSpec.length
     }
-    assert(plainParts.contains(0),
-      "default-threshold rfm config stays on the plain global-ntile plan")
-    assert(plain.collect().map(_.toSeq).toSet ==
-      want.collect().map(_.toSeq).toSet,
-      "both routes must produce the identical card")
+    assert(parts.contains(0),
+      "a below-threshold rfm config takes the plain global-ntile plan")
+    val got = compiled.collect().map(_.toSeq).toSet
+    assert(got == graft.operators.Windowed.rfmCard(events,
+      "user_id", "ts", "value", nTiles = 5).collect().map(_.toSeq).toSet,
+      "config-compiled rfm must equal the programmatic card")
+    assert(got == graft.operators.Windowed.rfmCardSharded(events,
+      "user_id", "ts", "value", nTiles = 5, vBuckets = 8, kBuckets = 8)
+      .collect().map(_.toSeq).toSet,
+      "both plans must produce the identical card")
+  }
+
+  /** The Spark jobs `body` launches, in start order, as (description,
+    * is a result job) pairs (the DedupSpec listener pattern: a private
+    * job group, so jobs of other work never count). Under AQE one
+    * driver action is one result job plus one job per shuffle stage it
+    * materializes first; a job whose final stage is a shuffle map stage
+    * (a stage with a shuffle dependency id — Spark-internal, read
+    * reflectively) is such a stage job. */
+  private def shuffleDepId(si: org.apache.spark.scheduler.StageInfo): Option[_] =
+    si.getClass.getMethod("shuffleDepId").invoke(si).asInstanceOf[Option[_]]
+
+  private def constructionJobs(group: String)(body: => Unit): Seq[(String, Boolean)] = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          started.add((String.valueOf(e.properties.getProperty("spark.job.description")),
+            shuffleDepId(e.stageInfos.maxBy(_.stageId)).isEmpty))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "caller", interruptOnCancel = false)
+    try {
+      body
+      // job events reach listeners asynchronously: wait for the tracker's count
+      val deadline = System.nanoTime() + 10000000000L
+      while (started.size < sc.statusTracker.getJobIdsForGroup(group).length &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(200)
+      assert(started.size == sc.statusTracker.getJobIdsForGroup(group).length)
+      import scala.jdk.CollectionConverters._
+      started.asScala.toSeq
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
+  }
+
+  test("events configs and rfmCard launch only their own construction jobs") {
+    // frames no earlier test has built: a per-JVM cache of earlier
+    // answers cannot hide a construction job
+    val log = spark.range(6000).select(
+      when(col("id") % 5 < 3, lit(7L)).otherwise(col("id") % 89).as("user_id"),
+      timestamp_millis(lit(1710000000000L) + col("id") * 7000L).as("ts"),
+      col("id").as("event_id"),
+      when(col("id") % 3 === 0, lit("purchase")).otherwise(lit("view"))
+        .as("event_type"),
+      (col("id") % 13).cast("double").as("value"))
+    val skewYaml =
+      """events_analytics:
+        |  enrich: {left_type: purchase, right_type: view, value_col: value}
+        |  sessions: {gap_seconds: 600}
+        |  skew: {num_buckets: 8}
+        |""".stripMargin
+    var skewed: org.apache.spark.sql.DataFrame = null
+    val eventsJobs = constructionJobs("graft-events-construction") {
+      skewed = CurationCompiler.compileEventsYaml(skewYaml, log)
+    }
+    assert(eventsJobs.filter(_._2).map(_._1).sorted == Seq(
+      "graft:Temporal.asofJoinSkewed.span", "graft:Windowed.sessionizeSkewed.span"),
+      s"the skew mapping may launch only the two span passes, got $eventsJobs")
+    assert(eventsJobs.forall(j => j._1.endsWith(".span")),
+      s"every stage job belongs to a span pass, got $eventsJobs")
+    val plain = CurationCompiler.compileEventsYaml(
+      skewYaml.replace("  skew: {num_buckets: 8}\n", ""), log)
+    assert(skewed.collect().map(_.toSeq).toSet == plain.collect().map(_.toSeq).toSet)
+
+    val keyed = log.withColumn("user_id", col("event_id") % 2000)
+    var card: org.apache.spark.sql.DataFrame = null
+    val cardJobs = constructionJobs("graft-rfm-construction") {
+      card = graft.operators.Windowed.rfmCard(keyed, "user_id", "ts", "value")
+    }
+    assert(cardJobs.count(_._2) == 1 &&
+      cardJobs.forall(_._1 == "graft:Windowed.rfmCard.stats"),
+      s"rfmCard must launch exactly its one stats job, got $cardJobs")
+    // past a lowered threshold (2,000 keys > 100) the same single stats
+    // pass picks the sharded ranks: no unpartitioned window, same card
+    var sharded: org.apache.spark.sql.DataFrame = null
+    val shardedJobs = constructionJobs("graft-rfm-sharded-construction") {
+      sharded = graft.operators.Windowed.rfmCardWith(keyed, "user_id", "ts",
+        "value", 5, plainMaxKeys = 100L, vBuckets = 8, kBuckets = 8)
+    }
+    assert(shardedJobs.count(_._2) == 1 &&
+      shardedJobs.forall(_._1 == "graft:Windowed.rfmCard.stats"),
+      s"a numeric-key sharded card needs only the stats job, got $shardedJobs")
+    val planWindows = PlanWalk.nodes(sharded).collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w.partitionSpec.length
+    }
+    assert(planWindows.nonEmpty && !planWindows.contains(0),
+      s"past the threshold the card must take the sharded ranks, got $planWindows")
+    assert(PlanWalk.nodes(card).exists {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w.partitionSpec.isEmpty
+      case _ => false
+    }, "below the threshold the card takes the three global ntile windows")
+    assert(sharded.collect().map(_.toSeq).toSet == card.collect().map(_.toSeq).toSet)
   }
 
   test("events analytics config: parse defaults and loud failures") {
@@ -1216,6 +1324,26 @@ class CurationCompilerSpec extends AnyFunSuite {
       graft.config.EventsAnalyticsConfig.fromYaml(
         "events_analytics:\n  enrich: {left_type: a, right_type: a}\n" +
           "  sessions: {gap_seconds: 1}\n")
+    }
+    // unknown keys fail at parse time and name the key, at every level:
+    // a config written for the retired routing share stops here
+    // instead of silently compiling another plan
+    def unknown(yaml: String, key: String): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        graft.config.EventsAnalyticsConfig.fromYaml(yaml)
+      }
+      assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+    }
+    val ok = "events_analytics:\n  enrich: {left_type: a, right_type: b}\n" +
+      "  sessions: {gap_seconds: 1}\n"
+    unknown(ok + "  skew: {share: 0.001, num_buckets: 8}\n", "share")
+    unknown(ok + "  skew_buckets: 8\n", "skew_buckets")
+    unknown("events_analytics:\n  enrich: {left_type: a, right_type: b, " +
+      "tolerance: 60}\n  sessions: {gap_seconds: 1}\n", "tolerance")
+    unknown("events_analytics:\n  enrich: {left_type: a, right_type: b}\n" +
+      "  sessions: {gap_seconds: 1, gap: 2}\n", "gap")
+    intercept[IllegalArgumentException] { // skew must be a mapping
+      graft.config.EventsAnalyticsConfig.fromYaml(ok + "  skew: 8\n")
     }
   }
 

@@ -376,8 +376,8 @@ class StreamingOpsSpec extends AnyFunSuite {
       .select("doc_id", "text")
     val rows = staticDocs.as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
-    val langOut = StreamingOps.streamingDetectedLanguage(
-      mem.toDF().toDF("doc_id", "text"), "text")
+    val langOut = graft.functions.TextFunctions.withDetectedLanguage(
+      mem.toDF().toDF("doc_id", "text"), col("text"), "detected_lang")
     val qualOut = StreamingOps.streamingQuality(
       mem.toDF().toDF("doc_id", "text"), "text")
     val q1 = langOut.writeStream.format("memory").queryName("stream_langid")
@@ -426,8 +426,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF().toDF("doc_id", "text")
     val weight = least(lit(1.0), length(col("text")).cast("double") / 400.0)
-    val sampled = StreamingOps.streamingWeightedSample(stream, "doc_id", weight)
-    val split = StreamingOps.streamingAssignSplit(stream, "doc_id",
+    val sampled = graft.operators.Sampling.weightedSample(stream, "doc_id", weight)
+    val split = graft.operators.Sampling.assignSplit(stream, "doc_id",
       Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1))
     assert(sampled.isStreaming && split.isStreaming)
     val q1 = sampled.writeStream.format("memory").queryName("stream_wsample")
@@ -913,7 +913,7 @@ class StreamingOpsSpec extends AnyFunSuite {
         Seq.fill(2)(ws(rnd.nextInt(ws.size))).mkString(" ")))
     }
     val mem = MemoryStream[(String, String)]
-    val out = StreamingOps.streamingLangid(
+    val out = graft.operators.Classifier.withLangid(
       mem.toDF().toDF("doc_id", "text"), "text", m)
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("stream_langid_trained")
@@ -975,7 +975,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       (3L, "SHOUTING ONLY\n404 404 404"), // fully removed -> doc dropped
       (4L, prose))
     val mem = MemoryStream[(Long, String)]
-    val out = StreamingOps.streamingFilterLines(
+    val out = graft.operators.CorpusClean.filterLines(
       mem.toDF().toDF("doc_id", "text"), "text")
     assert(out.isStreaming)
     val q = out.writeStream.format("memory").queryName("stream_filter_lines")
@@ -1032,7 +1032,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val png = "89504E470D0A1A0A0000000D4948445200000320" + "00000258"
     val mem = MemoryStream[(Long, String)]
-    val out = StreamingOps.streamingMediaIntake(
+    val out = graft.operators.Multimodal.withMediaMeta(
       mem.toDF().toDF("media_id", "hex")
         .select(col("media_id"), unhex(col("hex")).as("payload")), "payload")
       .select("media_id", "modality", "format", "width", "n_bytes")

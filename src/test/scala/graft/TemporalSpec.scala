@@ -448,30 +448,25 @@ class TemporalSpec extends AnyFunSuite {
     }
     assert(winParts.contains(2),
       s"local durations must partition by (key, bucket), got $winParts")
-    // routed front door (r17 — the last skew-family member to get
-    // one): monster log takes the bucketed plan, uniform keys keep
-    // the single per-key window
-    assert(asMap(Temporal.timeWeightedAvgAuto(big, "user_id", "ts", "value",
-      "event_id")) == bw, "routed front door must agree on the monster log")
-    val autoParts = PlanWalk.nodes(Temporal.timeWeightedAvgAuto(big,
-      "user_id", "ts", "value", "event_id")).collect {
+    // the default 64 buckets — the bucket count the events config
+    // compiles when its skew mapping omits num_buckets — on the monster
+    // log and on well-distributed keys
+    val skewed64 = Temporal.timeWeightedAvgSkewed(big, "user_id", "ts",
+      "value", "event_id")
+    assert(asMap(skewed64) == bw, "64 buckets must agree on the monster log")
+    val parts64 = PlanWalk.nodes(skewed64).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
         w.partitionSpec.length
     }
-    assert(autoParts.contains(2),
-      s"monster log must route to (key, bucket) windows, got $autoParts")
+    assert(parts64.contains(2),
+      s"monster log must run (key, bucket) windows, got $parts64")
     val uniform = spark.range(4000).select((col("id") % 211).as("user_id"),
       timestamp_millis(lit(1700000000000L) + col("id") * 1000L).as("ts"),
       (col("id") % 23).cast("double").as("value"), col("id").as("event_id"))
-    val plain = Temporal.timeWeightedAvgAuto(uniform, "user_id", "ts",
-      "value", "event_id")
-    plain.collect()
-    val plainParts = PlanWalk.nodes(plain).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec =>
-        w.partitionSpec.length
-    }
-    assert(plainParts.nonEmpty && plainParts.forall(_ == 1),
-      "well-distributed keys stay on the plain per-key plan")
+    assert(asMap(Temporal.timeWeightedAvgSkewed(uniform, "user_id", "ts",
+      "value", "event_id")) ==
+      asMap(Temporal.timeWeightedAvg(uniform, "user_id", "ts", "value",
+        "event_id")), "64 buckets must agree on well-distributed keys")
   }
 
   test("resampleLocf: daily grid, forward fill, NULL before first observation") {

@@ -267,17 +267,18 @@ class WindowedSpec extends AnyFunSuite {
     }
     assert(unpartitioned.isEmpty,
       s"sharded card must not plan an unpartitioned window, found ${unpartitioned.size}")
-    // routed front door: tiny threshold -> sharded (no unpartitioned
-    // window), default threshold -> plain three-window card
-    val autoSharded = Windowed.rfmCardAuto(monster, "user_id", "ts", "value",
-      5, maxPlainKeys = 100L, vBuckets = 8, kBuckets = 8)
+    // the front door picks from the exact key count: past a lowered
+    // threshold (24,000 keys > 100) the sharded plan, at the default
+    // threshold the plain three-window card
+    val autoSharded = Windowed.rfmCardWith(monster, "user_id", "ts", "value",
+      5, plainMaxKeys = 100L, vBuckets = 8, kBuckets = 8)
     assert(asMap(autoSharded) == want)
     assert(!PlanWalk.nodes(autoSharded).exists {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
         w.partitionSpec.isEmpty
       case _ => false
     }, "past the key threshold the card must route to the sharded plan")
-    val autoPlain = Windowed.rfmCardAuto(monster, "user_id", "ts", "value", 5)
+    val autoPlain = Windowed.rfmCard(monster, "user_id", "ts", "value", 5)
     autoPlain.collect()
     assert(PlanWalk.nodes(autoPlain).exists {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
@@ -337,9 +338,10 @@ class WindowedSpec extends AnyFunSuite {
         w.partitionSpec.isEmpty
       case _ => false
     }, "string-key sharded card must not plan an unpartitioned window")
-    // the routed front door now takes string keys past the threshold
-    val auto = Windowed.rfmCardAuto(tie, "user_key", "ts", "value", 5,
-      maxPlainKeys = 100L, vBuckets = 8, kBuckets = 8)
+    // the front door takes string keys to the sharded plan past the
+    // threshold too
+    val auto = Windowed.rfmCardWith(tie, "user_key", "ts", "value", 5,
+      plainMaxKeys = 100L, vBuckets = 8, kBuckets = 8)
     assert(asMapS(auto) == want)
     assert(!PlanWalk.nodes(auto).exists {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
@@ -595,28 +597,23 @@ class WindowedSpec extends AnyFunSuite {
       s"local sessions must partition by (key, bucket), got $winParts")
   }
 
-  test("sessionizeAuto: monster key routes to the bucketed plan, uniform stays") {
+  test("sessionizeSkewed at 8 buckets equals batch on monster and uniform keys") {
     val skewed = spark.range(5000).select(
       when(col("id") % 5 < 3, lit(7L)).otherwise(col("id") % 97).as("user_id"),
       timestamp_millis(lit(1700000000000L) + col("id") * 2000L).as("ts"))
-    val routed = Windowed.sessionizeAuto(skewed, "user_id", "ts", 30, numBuckets = 8)
-    val want = asSetL(Windowed.sessionizeBatch(skewed, "user_id", "ts", 30))
-    assert(asSetL(routed) == want)
-    val winParts = PlanWalk.nodes(routed).collect {
+    val bucketed = Windowed.sessionizeSkewed(skewed, "user_id", "ts", 30, numBuckets = 8)
+    assert(asSetL(bucketed) ==
+      asSetL(Windowed.sessionizeBatch(skewed, "user_id", "ts", 30)))
+    val winParts = PlanWalk.nodes(bucketed).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
         w.partitionSpec.length
     }
-    assert(winParts.contains(2), "60% key must route to (key, bucket) slicing")
+    assert(winParts.contains(2), "the 60% key must slice over (key, bucket)")
     val uniform = spark.range(5000).select((col("id") % 97).as("user_id"),
       timestamp_millis(lit(1700000000000L) + col("id") * 2000L).as("ts"))
-    val kept = Windowed.sessionizeAuto(uniform, "user_id", "ts", 30, numBuckets = 8)
-    kept.collect()
-    val keptParts = PlanWalk.nodes(kept).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec =>
-        w.partitionSpec.length
-    }
-    assert(keptParts.nonEmpty && keptParts.forall(_ == 1),
-      "well-distributed keys stay on the single-shuffle batch plan")
+    assert(asSetL(Windowed.sessionizeSkewed(uniform, "user_id", "ts", 30,
+      numBuckets = 8)) ==
+      asSetL(Windowed.sessionizeBatch(uniform, "user_id", "ts", 30)))
   }
 
   private def asSetL(df: org.apache.spark.sql.DataFrame) =
