@@ -572,7 +572,7 @@ object Windowed {
    * frequency/monetary DESCENDING — biggest = tile 1; key ASC
    * tie-breaks make every tile deterministic).
    *
-   * One front door, one construction job: the per-key frame is
+   * One front door, one construction pass: the per-key frame is
    * `localCheckpoint`ed lazily and ONE stats pass over it yields the
    * corpus max (recency's anchor, a plan literal) and the exact key
    * count n. The count picks the plan: up to [[RfmPlainMaxKeys]] keys
