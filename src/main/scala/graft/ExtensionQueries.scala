@@ -39,9 +39,16 @@ object ExtensionQueries {
     * specific heavy query constructions instead (guide §2.4: no
     * exchanges "for parallelism" where there is nothing to feed). */
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    source(s, dir, "documents")
   private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    source(s, dir, "embeddings")
+  /** Every register read of a source table: the parquet schema job it
+    * launches at construction runs under `graft:source.<table>`, so a
+    * job profile attributes it to the table it reads. */
+  private def source(s: SparkSession, dir: String, table: String): DataFrame =
+    graft.operators.JobNames.named(s, s"graft:source.$table") {
+      s.read.parquet(s"$dir/$table.parquet")
+    }
   /** The fanned twins, for query constructions whose downstream per-row
     * kernels are measured-heavy (BPE encode, n-gram scoring over every
     * token, vector math per candidate). */
@@ -476,7 +483,7 @@ object ExtensionQueries {
     // the legacy flag) and plain timestamp[us]; normalize to TimestampType
     // here so every consumer matches the oracle's CAST(ts AS TIMESTAMP).
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = source(s, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -3219,10 +3226,11 @@ object ExtensionQueries {
         "doc_id", "conv")
         .select(col("doc_id"), col("n_copies")))),
 
-    // monster-family hardened path (r17): one-pass min_by exemplar
-    // aggregate — second execution plan on the SAME oracle text
+    // the monster-family row, kept under its name on the SAME oracle
+    // text: the one-pass min_by exemplar aggregate it was added for is
+    // now dedupByAssistant's only plan, so it runs the same operator
     "q_chat_dedup_skewed" -> ((s, dir) =>
-      det(graft.operators.Chat.dedupByAssistantSkewed(chatFrame(s, dir),
+      det(graft.operators.Chat.dedupByAssistant(chatFrame(s, dir),
         "doc_id", "conv")
         .select(col("doc_id"), col("n_copies")))),
 
@@ -3260,15 +3268,11 @@ object ExtensionQueries {
     // cross-operator pathology smoke test (the q_pipeline_pretrain
     // discipline): four operators, ONE composed plan
     "q_pipeline_chat" -> ((s, dir) => {
-      // validity as a SEMI JOIN on ids, not an inline filter: a pushed
-      // filter(chat_ok) substitutes every flag's expression tree into
-      // the conv-carrying branch (58 regex calls per row, and dedup's
-      // two join sides each re-evaluate it — measured 10.3 s at sf0.1;
-      // the id semi-join keeps the validation plan on its own cheap
-      // branch: 2.9 s, hash-identical)
-      val okIds = graft.operators.Chat.validateChat(chatFrame(s, dir), "conv")
-        .filter(col("chat_ok")).select(col("doc_id"))
-      val ok = chatFrame(s, dir).join(okIds, Seq("doc_id"), "left_semi")
+      // validity as an INLINE filter: validateChat's fence pins the
+      // staged conv, so filter(chat_ok) cannot substitute the conv
+      // construction into a pushed predicate — one scan, conv built once
+      val ok = graft.operators.Chat.validateChat(chatFrame(s, dir), "conv")
+        .filter(col("chat_ok")).drop(graft.operators.Chat.ValidityFlags: _*)
       val deduped = graft.operators.Chat.dedupByAssistant(ok, "doc_id", "conv")
       det(graft.operators.Chat.renderChat(deduped, "conv")
         .select(col("doc_id"), col("rendered"), col("n_copies")))
@@ -3580,13 +3584,14 @@ object ExtensionQueries {
         .select(col("doc_id"), col("n_copies")))
     }),
 
-    // monster-family hardened path (r17): one-pass min_by exemplar
-    // aggregate — second execution plan on the SAME oracle text
+    // the monster-family row, kept under its name on the SAME oracle
+    // text: the one-pass min_by exemplar aggregate it was added for is
+    // now dedupPairs' only plan, so it runs the same operator
     "q_pref_dedup_skewed" -> ((s, dir) => {
       val base = validPairFrame(s, dir)
       val resampled = base.filter(pmod(col("doc_id"), lit(10)) === 0)
         .withColumn("doc_id", col("doc_id") + 10000)
-      det(graft.operators.Preference.dedupPairsSkewed(base.unionAll(resampled),
+      det(graft.operators.Preference.dedupPairs(base.unionAll(resampled),
         "doc_id", "prompt", "chosen")
         .select(col("doc_id"), col("n_copies")))
     }),
@@ -3756,7 +3761,7 @@ object ExtensionQueries {
     // three dims broadcast (stats-driven, no hints needed) and ONE
     // fact-fact equi-join; subtotals per region and grand total
     "q_star_revenue" -> ((s, dir) => {
-      def t(n: String) = s.read.parquet(s"$dir/$n.parquet")
+      def t(n: String) = source(s, dir, n)
       val enriched = t("lineitem")
         .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
         .join(t("customer"), col("o_custkey") === col("c_custkey"))
@@ -3772,7 +3777,7 @@ object ExtensionQueries {
     // the raw bit math over lineitem's two key columns (low 16 bits
     // each; the writer path is spec-gated on per-file range tightness)
     "q_layout_zorder" -> ((s, dir) =>
-      det(s.read.parquet(s"$dir/lineitem.parquet")
+      det(source(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"),
           graft.functions.ZOrder.interleave(
             Seq(col("l_orderkey"), col("l_partkey")), 16).as("z")))),
@@ -9304,9 +9309,11 @@ object ExtensionQueries {
     // the YAML-compiled chat pipeline must be bit-identical to the
     // hand-composed one: SAME oracle text, two construction paths
     .updated("q_pipeline_chat_config", oracleSqlBase("q_pipeline_chat"))
-    // the monster-family hardened dedup paths (r17): second execution
-    // plans — groupBy-count + SHUFFLE_HASH join-back / min_by exemplar
-    // aggregate — graded on the SAME oracle texts as the window plans
+    // the monster-family dedup rows (r17), graded on the SAME oracle
+    // texts as their plain twins: the groupBy-count + SHUFFLE_HASH
+    // join-back plan of duplicationWeightsSkewed is a second execution
+    // path; the chat and pair rows run their operator's one min_by
+    // exemplar aggregate, the plan they were added to grade
     .updated("q_dedup_softweights_skewed", oracleSqlBase("q_dedup_softweights"))
     .updated("q_chat_dedup_skewed", oracleSqlBase("q_chat_dedup"))
     .updated("q_pref_dedup_skewed", oracleSqlBase("q_pref_dedup"))

@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
  * between jobs) without the UI. Run 0 is the JVM's first (cold)
  * construction, so one-time per-JVM work shows up there; runs
  * 1..repeat are warm. Each run's total splits out the jobs launched
- * during construction.
+ * during construction; the forced execution's jobs carry the
+ * description `graft:exec.<query>`.
  *
  * Usage: runMain graft.JobProfile <query> [repeat]
  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in graft.Bench.
@@ -75,8 +76,10 @@ object JobProfile {
       val df = fn(spark, sfDir)
       val tCons = System.nanoTime()
       val consEndMs = System.currentTimeMillis()
-      val n = org.apache.spark.sql.GraftColumnBridge
-        .withoutTopLevelSort(df).queryExecution.toRdd.count()
+      val n = graft.operators.JobNames.named(spark, s"graft:exec.$name") {
+        org.apache.spark.sql.GraftColumnBridge
+          .withoutTopLevelSort(df).queryExecution.toRdd.count()
+      }
       val tEnd = System.nanoTime()
       Thread.sleep(300) // let the listener bus drain
       val base = jobs.values.headOption.map(_.start).getOrElse(0L)

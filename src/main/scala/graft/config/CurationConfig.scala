@@ -300,10 +300,10 @@ object CurationConfig {
   * content>>`, extra columns preserved) to a conversations frame;
   * [[ChatRenderStage]] ADDS the `rendered` column and must be last. */
 sealed trait ChatStage
-/** [[graft.operators.Chat.validateChat]] + keep `chat_ok` rows — via
-  * the id SEMI-JOIN discipline (an inline filter would push every
-  * flag's expression tree into the conv-carrying branch — the
-  * q_pipeline_chat pathology). */
+/** [[graft.operators.Chat.validateChat]] + keep `chat_ok` rows, as an
+  * inline filter that drops the six flag columns again (the fence
+  * inside validateChat keeps the conv construction out of the pushed
+  * predicate, so conv is computed once on one scan). */
 final case class ChatValidateFilterStage(extraRoles: Seq[String]) extends ChatStage
 /** [[graft.operators.Chat.mapTurnContent]] with
   * [[graft.functions.TextFunctions.redactPii]] inside every turn. */

@@ -27,8 +27,8 @@ import org.apache.spark.sql.types._
  * from codegen'd higher-order functions (`transform` / `filter` /
  * `exists` / `aggregate`) over the turn array — zero shuffle, no
  * UDFs, rides the scan. The one exception is [[dedupByAssistant]],
- * which shuffles sha2 fingerprints on the [[Dedup.exactDedup]]
- * fingerprint-window contract — never turn text.
+ * which shuffles sha2 fingerprints into one map-side-combined
+ * exemplar aggregate — never turn text.
  */
 object Chat {
 
@@ -82,6 +82,10 @@ object Chat {
    * Empty conversations: starts_user/ends_assistant false, alternates
    * vacuously true, chat_ok false.
    *
+   * Keeping valid rows is the inline `.filter(col("chat_ok"))
+   * .drop(ValidityFlags: _*)`: the staged conv is fenced, so the
+   * filter stops above it and conv is computed once.
+   *
    * 100 TB design: zero-shuffle row-local projection; every check is
    * a codegen'd higher-order function over the turn array.
    */
@@ -133,6 +137,10 @@ object Chat {
           !col("has_empty_turn") && !col("has_bad_role"))
       .drop("__nonsys").drop("__convf")
   }
+
+  /** The six columns [[validateChat]] adds. */
+  val ValidityFlags: Seq[String] = Seq("starts_user", "alternates",
+    "ends_assistant", "has_empty_turn", "has_bad_role", "chat_ok")
 
   /**
    * Render a conversation to the single string the tokenizer consumes
@@ -283,87 +291,50 @@ object Chat {
    * delete unrelated rows (the blank-line exemption of
    * [[CorpusClean.dedupLinesWithinDoc]], same reasoning).
    *
+   * Precondition: `idCol` is a unique row id — the keep rule is "row
+   * whose id is the family minimum". (All graft sources provide one:
+   * doc_id / a monotonic id.) `n_copies` is an output column this
+   * operator owns; an input column of that name is refused rather
+   * than silently clobbered.
+   *
    * 100 TB design: the key leaving the executor is a `sha2`
    * fingerprint of the normalized assistant text, never the text
    * itself ([[Dedup]]'s fingerprint-shuffle contract); ONE shuffle,
-   * one pass — the fingerprint-window shape, see the body comment.
+   * one scan, no self-join — [[keepMinIdPerFp]]'s map-side-combined
+   * exemplar aggregate, so even a canned-answer family holding most
+   * of the corpus leaves each map task as one candidate row.
    */
   def dedupByAssistant(df: DataFrame, idCol: String, convCol: String): DataFrame = {
-    // Precondition: idCol is a unique row id — the keep rule is
-    // "row whose id is the family minimum", so duplicate ids would
-    // retain every row carrying the minimal id. (All graft sources
-    // provide one: doc_id / a monotonic id.) n_copies is an output
-    // column this operator owns; refuse to silently clobber an input
-    // column of the same name.
     require(!df.columns.contains("n_copies"),
       "dedupByAssistant emits n_copies; rename or drop the input column first")
-    // [[Dedup.exactDedup]]'s fingerprint-WINDOW contract: ONE shuffle
-    // on the hash key, one pass over the input, no self-join (a
-    // groupBy+join shape evaluates the input on both join sides —
-    // measured 2.4x on the pipeline query whose input is itself an
-    // expensive plan). No-assistant rows (empty normalized answer)
-    // carry no dedup evidence: their key falls back to their own id,
-    // so each is a singleton family — all kept, n_copies 1, and never
-    // one giant skewed NULL partition.
-    val withKey = withAssistantFp(df, idCol, convCol)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("__fp"))
-    withKey
-      .withColumn("__keep", min(col(idCol)).over(w))
-      .withColumn("n_copies", count(lit(1)).over(w))
-      .filter(col(idCol) === col("__keep"))
-      .select(df.columns.map(col) :+ col("n_copies"): _*)
-  }
-
-  /**
-   * Skew-hardened [[dedupByAssistant]] — the monster-family path. The
-   * default's unfiltered window `count` buffers an entire duplicate
-   * family in ONE task (InferWindowGroupLimit only trims rank-FILTERED
-   * windows, and `n_copies` is not a rank filter), so a 100M-copy
-   * canned-answer family at crawl scale is a single-task partition
-   * buffer. Because this operator keeps exactly ONE exemplar per
-   * family, the hardened plan needs no join-back at all: a single
-   * `min_by(struct(row), id)` + `count` aggregate — O(1) state per
-   * group, map-side combined (a monster family leaves each map task
-   * as one candidate row + a partial count), ONE scan of the input
-   * (the window path's own single-scan advantage, kept). Output
-   * identical (graded on the q_chat_dedup oracle text); precondition
-   * unchanged — `idCol` unique, so the family minimum is a unique row.
-   *
-   * Why the window stays the DEFAULT anyway: on well-distributed
-   * families the aggregate shuffles one candidate CONVERSATION per
-   * (task, family) — nearly the full corpus, same as the window — but
-   * pays struct packing/unpacking on every row; measured ~even at
-   * fixture scale, and the window plan composes with the pipeline's
-   * other window steps. Call this path only for a frame known to hold
-   * a monster family.
-   */
-  def dedupByAssistantSkewed(df: DataFrame, idCol: String,
-                             convCol: String): DataFrame = {
-    require(!df.columns.contains("n_copies"),
-      "dedupByAssistantSkewed emits n_copies; rename or drop the input column first")
-    val withKey = withAssistantFp(df, idCol, convCol)
-    withKey.groupBy(col("__fp"))
-      .agg(min_by(struct(df.columns.map(col): _*), col(idCol)).as("__row"),
-        count(lit(1)).as("n_copies"))
-      .select(df.columns.map(c => col("__row").getField(c).as(c)) :+
-        col("n_copies"): _*)
-  }
-
-  /** The assistant fingerprint — ONE definition shared by
-    * [[dedupByAssistant]] and [[dedupByAssistantSkewed]] (the two
-    * execution paths grade on one oracle text, so the key must be
-    * literally the same code, not a copy that can drift). */
-  private def withAssistantFp(df: DataFrame, idCol: String,
-                              convCol: String): DataFrame = {
     val norm = assistantNorm(convCol)
     // stage the normalized answer once: inline, the HOF chain would
-    // evaluate per reference (condition + hash)
-    df.withColumn("__norm", norm)
+    // evaluate per reference (condition + hash). No-assistant rows
+    // (empty normalized answer) carry no dedup evidence: their key
+    // falls back to their own id, so each is a singleton family — all
+    // kept, n_copies 1, and never one giant skewed NULL group.
+    val keyed = df.withColumn("__norm", norm)
       .withColumn("__fp", coalesce(
         when(col("__norm") =!= "", sha2(col("__norm"), 256)),
         concat(lit("__noans#"), col(idCol).cast(StringType))))
-      .drop("__norm")
+    keepMinIdPerFp(keyed, df.columns.toSeq, idCol)
   }
+
+  /** The keep-one-exemplar plan of the fingerprint dedups
+    * ([[dedupByAssistant]], [[Preference.dedupPairs]]): per `__fp`
+    * family of `keyed`, the `cols` of its lowest-`idCol` row plus the
+    * family size `n_copies`, as ONE `min_by(struct(row), id)` + `count`
+    * aggregate — O(1) state per group and map-side combined, so a
+    * monster family leaves each map task as one candidate row and a
+    * partial count (an unfiltered window `count` would buffer the
+    * whole family in one task). One scan of the input, no join-back. */
+  private[operators] def keepMinIdPerFp(keyed: DataFrame, cols: Seq[String],
+                                        idCol: String): DataFrame =
+    keyed.groupBy(col("__fp"))
+      .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("__row"),
+        count(lit(1)).as("n_copies"))
+      .select(cols.map(c => col("__row").getField(c).as(c)) :+
+        col("n_copies"): _*)
 
   /**
    * Conversation-level benchmark decontamination — [[Dedup

@@ -34,12 +34,12 @@ import org.apache.spark.sql.types._
  *
  * 100 TB design: validation is a zero-shuffle row-local projection
  * (codegen'd higher-order functions over the turn array, same as the
- * chat family); dedup shuffles 32-byte sha2 fingerprints on the
- * [[Dedup.exactDedup]] fingerprint-window contract (one shuffle, no
- * self-join, id-fallback keys so empty pairs never form one skewed
- * NULL family); the split is a zero-shuffle codegen'd projection
- * whose assignment is a pure function of the prompt key (stable
- * under corpus growth — [[Sampling.assignSplit]]'s contract).
+ * chat family); dedup shuffles 32-byte sha2 fingerprints into one
+ * map-side-combined exemplar aggregate (one shuffle, no self-join,
+ * id-fallback keys so empty pairs never form one skewed NULL
+ * family); the split is a zero-shuffle codegen'd projection whose
+ * assignment is a pure function of the prompt key (stable under
+ * corpus growth — [[Sampling.assignSplit]]'s contract).
  */
 object Preference {
 
@@ -149,62 +149,26 @@ object Preference {
    * "row whose id is the family minimum"). Refuses an input that
    * already has an `n_copies` column rather than clobbering it.
    *
-   * 100 TB design: [[Dedup.exactDedup]]'s fingerprint-WINDOW
-   * contract — ONE shuffle on a 32-byte sha2 key, one pass, no
-   * self-join; pairs with an empty chosen response carry no dedup
-   * evidence and fall back to their own id (singleton families, never
-   * one skewed empty-key partition).
+   * 100 TB design: ONE shuffle on a 32-byte sha2 key, one scan, no
+   * self-join — [[Chat.keepMinIdPerFp]]'s map-side-combined exemplar
+   * aggregate, shared with the chat dedup, so a monster family leaves
+   * each map task as one candidate row. Pairs with an empty chosen
+   * response carry no dedup evidence and fall back to their own id
+   * (singleton families, never one skewed empty-key group). Prompt
+   * and chosen are normalized in staged columns because HOF lambdas
+   * get no CSE.
    */
   def dedupPairs(df: DataFrame, idCol: String, promptCol: String,
                  chosenCol: String): DataFrame = {
     require(!df.columns.contains("n_copies"),
       "dedupPairs emits n_copies; rename or drop the input column first")
-    val withKey = withPairFp(df, idCol, promptCol, chosenCol)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("__fp"))
-    withKey
-      .withColumn("__keep", min(col(idCol)).over(w))
-      .withColumn("n_copies", count(lit(1)).over(w))
-      .filter(col(idCol) === col("__keep"))
-      .select(df.columns.map(col) :+ col("n_copies"): _*)
-  }
-
-  /** The (prompt, chosen) fingerprint — ONE definition shared by
-    * [[dedupPairs]] and [[dedupPairsSkewed]] (two execution paths, one
-    * oracle text: the key must be the same code, not a copy). Staged
-    * columns because HOF lambdas get no CSE. */
-  private def withPairFp(df: DataFrame, idCol: String, promptCol: String,
-                         chosenCol: String): DataFrame =
-    df.withColumn("__pn", promptNorm(promptCol))
+    val keyed = df.withColumn("__pn", promptNorm(promptCol))
       .withColumn("__cn", respNorm(col(chosenCol)))
       .withColumn("__fp", coalesce(
         when(col("__cn") =!= "", sha2(
           concat(col("__pn"), lit("\u0001"), col("__cn")), 256)),
         concat(lit("__nochosen#"), col(idCol).cast(StringType))))
-      .drop("__pn", "__cn")
-
-  /**
-   * Skew-hardened [[dedupPairs]] — the monster-family path
-   * ([[graft.operators.Chat.dedupByAssistantSkewed]]'s shape on the
-   * preference data model). The default's unfiltered window `count`
-   * buffers a whole duplicate family in one task (no rank filter, so
-   * InferWindowGroupLimit cannot trim it map-side); since this
-   * operator keeps exactly one exemplar per family, the hardened plan
-   * is a single `min_by(struct(row), id)` + `count` aggregate — O(1)
-   * state per group, map-side combined (a monster family leaves each
-   * map task as one candidate row + a partial count), one scan, no
-   * join-back. Identical output (graded on the q_pref_dedup oracle
-   * text); `idCol` unique per the operator precondition.
-   */
-  def dedupPairsSkewed(df: DataFrame, idCol: String, promptCol: String,
-                       chosenCol: String): DataFrame = {
-    require(!df.columns.contains("n_copies"),
-      "dedupPairsSkewed emits n_copies; rename or drop the input column first")
-    val withKey = withPairFp(df, idCol, promptCol, chosenCol)
-    withKey.groupBy(col("__fp"))
-      .agg(min_by(struct(df.columns.map(col): _*), col(idCol)).as("__row"),
-        count(lit(1)).as("n_copies"))
-      .select(df.columns.map(c => col("__row").getField(c).as(c)) :+
-        col("n_copies"): _*)
+    Chat.keepMinIdPerFp(keyed, df.columns.toSeq, idCol)
   }
 
   /**

@@ -588,8 +588,11 @@ object Temporal {
       .select(col(keyCol).as("__k"),
         col(tsCol).cast("timestamp").as("valid_from"),
         col(valueCol).as("__v"), tie.as("__tie"))
-    val span = base.agg(min(unix_micros(col("valid_from"))).as("lo"),
-      max(unix_micros(col("valid_from"))).as("hi")).head()
+    val span = JobNames.named(log.sparkSession,
+        "graft:Temporal.changeIntervalsSkewed.span") {
+      base.agg(min(unix_micros(col("valid_from"))).as("lo"),
+        max(unix_micros(col("valid_from"))).as("hi")).head()
+    }
     val (lo, hi) =
       if (span.isNullAt(0)) (0L, 0L) else (span.getLong(0), span.getLong(1))
     val width = math.max(1L, (hi - lo) / numBuckets + 1L)

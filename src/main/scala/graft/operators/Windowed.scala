@@ -286,9 +286,12 @@ object Windowed {
         s"plan (got $tsType): bucket order must equal the raw sort order")
     val e = events.select(col(keyCol).as("__k"), col(tsCol).as("__ts"),
       col(tieBreakCol).as("__tie"), col(valueCol).as("__v"))
-    val span = e.agg(
-      min(unix_micros(col("__ts").cast("timestamp"))).as("lo"),
-      max(unix_micros(col("__ts").cast("timestamp"))).as("hi")).head()
+    val span = JobNames.named(events.sparkSession,
+        "graft:Windowed.rollingAggSkewed.span") {
+      e.agg(
+        min(unix_micros(col("__ts").cast("timestamp"))).as("lo"),
+        max(unix_micros(col("__ts").cast("timestamp"))).as("hi")).head()
+    }
     val (lo, hi) =
       if (span.isNullAt(0)) (0L, 0L) else (span.getLong(0), span.getLong(1))
     val width = math.max(1L, (hi - lo) / numBuckets + 1L)

@@ -219,6 +219,37 @@ object CurationCompiler {
     }
   }
 
+  /** The ROW-LOCAL chat arms shared verbatim by [[compileChat]] and
+    * [[compileStreamingChat]] — [[rowLocalStage]]'s discipline for the
+    * chat surface: validity is the inline filter on `chat_ok` (the
+    * fence inside [[graft.operators.Chat.validateChat]] keeps the
+    * conv construction out of the pushed predicate, so it is computed
+    * once), redact and render are HOF projections, and decontaminate
+    * is a broadcast semi/anti join against a static eval frame — legal
+    * on a stream as-is. Returns None for the other stages. */
+  private def rowLocalChatStage(cur: DataFrame, stage: ChatStage,
+                                id: String, conv: String,
+                                resolve: Map[String, DataFrame]): Option[DataFrame] =
+    stage match {
+      case ChatValidateFilterStage(extraRoles) =>
+        Some(graft.operators.Chat.validateChat(cur, conv, extraRoles)
+          .filter(col("chat_ok"))
+          .drop(graft.operators.Chat.ValidityFlags: _*))
+      case ChatRedactStage() =>
+        Some(graft.operators.Chat.mapTurnContent(cur, conv,
+          graft.functions.TextFunctions.redactPii))
+      case ChatDecontaminateStage(name, n, eid, etext) =>
+        Some(graft.operators.Chat.decontaminateChat(cur, id, conv,
+          chatEval(resolve, name), eid, etext, n))
+      case ChatRenderStage() =>
+        Some(graft.operators.Chat.renderChat(cur, conv))
+      case _ => None
+    }
+
+  private def chatEval(resolve: Map[String, DataFrame], name: String): DataFrame =
+    resolve.getOrElse(name, throw new IllegalArgumentException(
+      s"chat stage references unresolved eval frame '$name'"))
+
   /**
    * Compile a [[graft.config.ChatCurationConfig]] into ONE composed
    * plan over the [[graft.operators.Chat]] family — the config
@@ -237,33 +268,14 @@ object CurationCompiler {
                   resolve: Map[String, DataFrame] = Map.empty): DataFrame = {
     val id = cfg.idCol
     val conv = cfg.convCol
-    def eval(name: String): DataFrame =
-      resolve.getOrElse(name, throw new IllegalArgumentException(
-        s"chat stage references unresolved eval frame '$name'"))
     cfg.stages.foldLeft(convs) { (cur, stage) =>
-      stage match {
-        case ChatValidateFilterStage(extraRoles) =>
-          // validity as an id SEMI-JOIN, never an inline filter — the
-          // pushed filter(chat_ok) alias-substitution pathology (see
-          // q_pipeline_chat's audit: 10.3 s -> 2.9 s, hash-identical)
-          val okIds = graft.operators.Chat
-            .validateChat(cur, conv, extraRoles)
-            .filter(col("chat_ok")).select(col(id))
-          cur.join(okIds, Seq(id), "left_semi")
-        case ChatRedactStage() =>
-          graft.operators.Chat.mapTurnContent(cur, conv,
-            graft.functions.TextFunctions.redactPii)
+      rowLocalChatStage(cur, stage, id, conv, resolve).getOrElse(stage match {
         case ChatDedupAssistantStage(keepCopies) =>
           val d = graft.operators.Chat.dedupByAssistant(cur, id, conv)
           if (keepCopies) d else d.drop("n_copies")
-        case ChatDecontaminateStage(name, n, eid, etext) =>
-          graft.operators.Chat.decontaminateChat(cur, id, conv,
-            eval(name), eid, etext, n)
         case ChatScrubStage(name, n, eid, etext) =>
           graft.operators.Chat.scrubChatTurns(cur, id, conv,
-            eval(name), eid, etext, n)
-        case ChatRenderStage() =>
-          graft.operators.Chat.renderChat(cur, conv)
+            chatEval(resolve, name), eid, etext, n)
         case ChatPackSftIdsStage(budget, shards, eosId) =>
           // tokenizer presence enforced at config construction; loaded
           // here (bounded driver-side read) like the document compiler
@@ -315,7 +327,9 @@ object CurationCompiler {
               eos, epochs, seed, padId = padId.getOrElse(-1L),
               noSplit = noSplit))
           graft.sources.PackedArtifactStore.validate(cur.sparkSession, path)
-      }
+        case other =>
+          throw new IllegalStateException(s"unhandled stage $other")
+      })
     }
   }
 
@@ -328,13 +342,10 @@ object CurationCompiler {
    * Compile the SAME chat curation config against a STREAMING frame —
    * [[compileStreaming]]'s discipline for the chat surface:
    *
-   *  - `validate_filter`, `redact`, `render` are row-local HOF
-   *    projections and compile as-is (validate filters INLINE here:
-   *    the batch semi-join would be a stream-stream join, and on a
-   *    micro-batch the alias-substitution pathology the semi-join
-   *    guards against is bounded by the batch);
-   *  - `decontaminate` is a stream-static broadcast semi/anti join —
-   *    legal as-is;
+   *  - `validate_filter`, `redact`, `render` and `decontaminate`
+   *    compile through the SHARED [[rowLocalChatStage]] arms (HOF
+   *    projections, the inline validity filter, a stream-static
+   *    broadcast semi/anti join — all legal on a micro-batch as-is);
    *  - `dedup_assistant` becomes the watermark-bounded
    *    [[graft.streaming.StreamingOps.streamingChatDedup]] (same
    *    `assistantNorm` fingerprint as the batch operator; no
@@ -353,27 +364,11 @@ object CurationCompiler {
                            resolve: Map[String, DataFrame] = Map.empty): DataFrame = {
     val id = cfg.idCol
     val conv = cfg.convCol
-    def eval(name: String): DataFrame =
-      resolve.getOrElse(name, throw new IllegalArgumentException(
-        s"chat stage references unresolved eval frame '$name'"))
     cfg.stages.foldLeft(stream) { (cur, stage) =>
-      stage match {
-        case ChatValidateFilterStage(extraRoles) =>
-          graft.operators.Chat.validateChat(cur, conv, extraRoles)
-            .filter(col("chat_ok"))
-            .drop("chat_ok", "starts_user", "alternates", "ends_assistant",
-              "has_empty_turn", "has_bad_role")
-        case ChatRedactStage() =>
-          graft.operators.Chat.mapTurnContent(cur, conv,
-            graft.functions.TextFunctions.redactPii)
+      rowLocalChatStage(cur, stage, id, conv, resolve).getOrElse(stage match {
         case ChatDedupAssistantStage(_) =>
           graft.streaming.StreamingOps.streamingChatDedup(
             cur, id, conv, tsCol, watermark)
-        case ChatDecontaminateStage(name, n, eid, etext) =>
-          graft.operators.Chat.decontaminateChat(cur, id, conv,
-            eval(name), eid, etext, n)
-        case ChatRenderStage() =>
-          graft.operators.Chat.renderChat(cur, conv)
         case other: ChatScrubStage =>
           throw new UnsupportedOperationException(
             s"stage $other joins a covered-position aggregate back onto the " +
@@ -405,7 +400,9 @@ object CurationCompiler {
               "artifact (corpus-global window offsets + a store write) and " +
               "cannot run on a micro-batch; run it in the batch compaction " +
               "pass")
-      }
+        case other =>
+          throw new IllegalStateException(s"unhandled stage $other")
+      })
     }
   }
 

@@ -345,26 +345,6 @@ object StreamingOps {
       .drop(r(keyCol))
   }
 
-  /** Streaming twin of [[graft.operators.Windowed.sessionizeNative]]:
-    * Spark's native session_window as a WATERMARKED streaming
-    * aggregation — sessions merge inside the stateful aggregate and
-    * emit once the watermark passes their close (append mode); the
-    * same +1 µs gap reconciliation keeps the boundary rule identical
-    * to the batch operators. State per open session is one row. */
-  def streamingSessionizeNative(events: DataFrame, keyCol: String,
-                                tsCol: String, gapSeconds: Long,
-                                watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(col(keyCol),
-        session_window(col(tsCol),
-          s"${gapSeconds * 1000000L + 1} microseconds"))
-      .agg(min(col(tsCol)).as("session_start"),
-        max(col(tsCol)).as("session_end"),
-        count(lit(1)).as("n_events"))
-      .select(col(keyCol), col("session_start"), col("session_end"),
-        col("n_events"))
-
   /** Streaming exact dedup with WATERMARK-BOUNDED state:
     * `dropDuplicatesWithinWatermark` collapses duplicates arriving
     * within the watermark delay of each other and evicts a key's state

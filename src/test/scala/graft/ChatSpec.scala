@@ -187,7 +187,21 @@ class ChatSpec extends AnyFunSuite {
       .isEmpty)
   }
 
-  test("dedupByAssistantSkewed equals dedupByAssistant on the fixture and a monster family") {
+  // ---- reference dedup: the per-family WINDOW formulation (min id and
+  // family count over a partition on the normalized answer; answerless
+  // rows partition on their own id), kept here to pin the operator's
+  // one-pass exemplar aggregate against an independent plan
+  private def windowDedup(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(
+      col("__norm"), when(col("__norm") === "", col("id")))
+    df.withColumn("__norm", Chat.assistantNorm("conv"))
+      .withColumn("__keep", min(col("id")).over(w))
+      .withColumn("n_copies", count(lit(1)).over(w))
+      .filter(col("id") === col("__keep"))
+      .select(df.columns.map(col) :+ col("n_copies"): _*)
+  }
+
+  test("dedupByAssistant equals the window reference on the fixture and a monster family") {
     // planted-fixture parity first (covers normalization, multi-turn
     // concat, no-assistant singletons)
     val fixture = frame(
@@ -199,10 +213,10 @@ class ChatSpec extends AnyFunSuite {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "n_copies").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(asSet(Chat.dedupByAssistantSkewed(fixture, "id", "conv")) ==
-      asSet(Chat.dedupByAssistant(fixture, "id", "conv")))
+    assert(asSet(Chat.dedupByAssistant(fixture, "id", "conv")) ==
+      asSet(windowDedup(fixture)))
     // monster family: 60% of 20k conversations share one normalized
-    // answer — the single-task window buffer the hardened path exists for
+    // answer — the single-task window buffer the aggregate avoids
     val big = spark.range(20000).select(col("id"),
       array(
         struct(lit("user").as("role"),
@@ -210,12 +224,14 @@ class ChatSpec extends AnyFunSuite {
         struct(lit("assistant").as("role"),
           when(col("id") % 5 < 3, lit("use merge sort"))
             .otherwise(concat(lit("ans"), col("id"))).as("content"))).as("conv"))
-    val want = asSet(Chat.dedupByAssistant(big, "id", "conv"))
+    val want = asSet(windowDedup(big))
     assert(want.contains(0L -> 12000L), "fixture sanity: monster family kept at min id")
-    val skewed = Chat.dedupByAssistantSkewed(big, "id", "conv")
-    assert(asSet(skewed) == want, "skewed path diverges from the window path")
-    skewed.collect()
-    val nodes = PlanWalk.nodes(skewed).map(_.nodeName.toLowerCase)
+    val kept = Chat.dedupByAssistant(big, "id", "conv")
+    assert(asSet(kept) == want, "the exemplar aggregate diverges from the window reference")
+    // the kept rows carry the exemplar's whole row, not just its id
+    assert(kept.filter(col("id") === 0).select("conv").head().getSeq[Row](0)
+      .map(_.getString(1)) == Seq("q0", "use merge sort"))
+    val nodes = PlanWalk.nodes(kept).map(_.nodeName.toLowerCase)
     assert(!nodes.exists(_.contains("window")),
       s"one-pass aggregate plan must not contain a window, got: ${nodes.mkString(", ")}")
   }

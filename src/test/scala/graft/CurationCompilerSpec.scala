@@ -287,6 +287,46 @@ class CurationCompilerSpec extends AnyFunSuite {
     }
   }
 
+  test("validate_filter compiles to one scan, one fence and no semi-join") {
+    // conv COMPUTED from a scanned column: the shape whose pushed
+    // filter(chat_ok) would substitute the conv construction into a
+    // scan-side predicate if the staged conv were not fenced
+    val dir = java.nio.file.Files.createTempDirectory("graft_chat_validate")
+    try {
+      spark.range(60).select(col("id").as("doc_id"),
+        when(col("id") % 4 === 0, concat(lit("assistant|first "), col("id")))
+          .otherwise(concat(lit("user|q"), col("id"), lit(";assistant|a"),
+            col("id") % 7)).as("packed"))
+        .write.mode("overwrite").parquet(dir.toString)
+      val convs = spark.read.parquet(dir.toString).select(col("doc_id"),
+        transform(split(col("packed"), ";"), t => struct(
+          split(t, "\\|").getItem(0).as("role"),
+          split(t, "\\|").getItem(1).as("content"))).as("conv"))
+      val out = CurationCompiler.compileChatYaml(
+        "stages:\n  - {op: validate_filter}\n", convs)
+      assert(out.columns.toSeq == Seq("doc_id", "conv"), "flag columns dropped")
+      assert(out.select("doc_id").as[Long].collect().toSet ==
+        (0L until 60L).filter(_ % 4 != 0).toSet, "assistant-first rows filtered")
+      val nodes = PlanWalk.nodes(out)
+      val joins = nodes.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.joinType
+      }
+      assert(!joins.contains(org.apache.spark.sql.catalyst.plans.LeftSemi),
+        s"validity is an inline filter, not an id semi-join: $joins")
+      val scans = nodes.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      assert(scans.size == 1, s"one source scan, got ${scans.size}")
+      val fences = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case f: graft.functions.OptimizerFence => f
+      }))
+      assert(fences.size == 1, s"conv staged once behind one fence, got ${fences.size}")
+    } finally {
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+  }
+
   test("chat streaming compile: row-local stages run, dedup is watermarked, scrub rejected") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1306,6 +1346,22 @@ class CurationCompilerSpec extends AnyFunSuite {
       case _ => false
     }, "below the threshold the card takes the three global ntile windows")
     assert(sharded.collect().map(_.toSeq).toSet == card.collect().map(_.toSeq).toSet)
+
+    // the other bucketed plans' span passes carry their operator's name too
+    val rollJobs = constructionJobs("graft-rolling-construction") {
+      graft.operators.Windowed.rollingAggSkewed(log, "user_id", "ts", "value",
+        3, "event_id", numBuckets = 8)
+    }
+    assert(rollJobs.count(_._2) == 1 &&
+      rollJobs.forall(_._1 == "graft:Windowed.rollingAggSkewed.span"),
+      s"rollingAggSkewed must launch only its named span pass, got $rollJobs")
+    val scdJobs = constructionJobs("graft-scd2-construction") {
+      graft.operators.Temporal.changeIntervalsSkewed(log, "user_id", "ts",
+        "event_type", Some("event_id"), numBuckets = 8)
+    }
+    assert(scdJobs.count(_._2) == 1 &&
+      scdJobs.forall(_._1 == "graft:Temporal.changeIntervalsSkewed.span"),
+      s"changeIntervalsSkewed must launch only its named span pass, got $scdJobs")
   }
 
   test("events analytics config: parse defaults and loud failures") {

@@ -95,7 +95,22 @@ class PreferenceSpec extends AnyFunSuite {
       "no-evidence pairs never collapse into one skewed family")
   }
 
-  test("dedupPairsSkewed equals dedupPairs on the fixture and a monster family") {
+  // ---- reference dedup: the per-family WINDOW formulation (min id and
+  // family count over a partition on the normalized (prompt, chosen);
+  // empty-chosen rows partition on their own id), kept here to pin the
+  // operator's one-pass exemplar aggregate against an independent plan
+  private def windowDedup(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("__pn"),
+      col("__cn"), when(col("__cn") === "", col("id")))
+    df.withColumn("__pn", Preference.promptNorm("prompt"))
+      .withColumn("__cn", Preference.respNorm(col("chosen")))
+      .withColumn("__keep", min(col("id")).over(w))
+      .withColumn("n_copies", count(lit(1)).over(w))
+      .filter(col("id") === col("__keep"))
+      .select(df.columns.map(col) :+ col("n_copies"): _*)
+  }
+
+  test("dedupPairs equals the window reference on the fixture and a monster family") {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "n_copies").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
@@ -105,20 +120,19 @@ class PreferenceSpec extends AnyFunSuite {
       (1L, p, "win", "lose1"), (2L, p, "win", "lose2"), (3L, p, "WIN  ", "x"),
       (4L, p, "other", "x"), (5L, Seq(t("user", "q2")), "win", "x"),
       (6L, p, "", "x"), (7L, p, null, "y"))
-    assert(asSet(Preference.dedupPairsSkewed(fixture, "id", "prompt", "chosen")) ==
-      asSet(Preference.dedupPairs(fixture, "id", "prompt", "chosen")))
+    assert(asSet(Preference.dedupPairs(fixture, "id", "prompt", "chosen")) ==
+      asSet(windowDedup(fixture)))
     // monster family: 60% of 20k pairs share (prompt, chosen)
     val big = spark.range(20000).select(col("id"),
       array(struct(lit("user").as("role"), lit("q").as("content"))).as("prompt"),
       when(col("id") % 5 < 3, lit("the winning answer"))
         .otherwise(concat(lit("w"), col("id"))).as("chosen"),
       lit("lose").as("rejected"))
-    val want = asSet(Preference.dedupPairs(big, "id", "prompt", "chosen"))
+    val want = asSet(windowDedup(big))
     assert(want.contains(0L -> 12000L), "fixture sanity: monster family kept at min id")
-    val skewed = Preference.dedupPairsSkewed(big, "id", "prompt", "chosen")
-    assert(asSet(skewed) == want, "skewed path diverges from the window path")
-    skewed.collect()
-    assert(!PlanWalk.nodes(skewed).map(_.nodeName.toLowerCase)
+    val kept = Preference.dedupPairs(big, "id", "prompt", "chosen")
+    assert(asSet(kept) == want, "the exemplar aggregate diverges from the window reference")
+    assert(!PlanWalk.nodes(kept).map(_.nodeName.toLowerCase)
       .exists(_.contains("window")),
       "one-pass aggregate plan must not contain a window")
   }

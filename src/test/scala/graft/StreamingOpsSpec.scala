@@ -1136,9 +1136,9 @@ class StreamingOpsSpec extends AnyFunSuite {
     // 1. native sessionization: hundreds of events, 3 keys; once the
     // watermark passes, closed sessions leave the store
     val sMem = MemoryStream[(Long, java.sql.Timestamp)]
-    val sOut = StreamingOps.streamingSessionizeNative(
-      sMem.toDF().toDF("user_id", "ts"), "user_id", "ts",
-      gapSeconds = 60, watermark = "10 seconds")
+    val sOut = graft.operators.Windowed.sessionizeNative(
+      sMem.toDF().toDF("user_id", "ts").withWatermark("ts", "10 seconds"),
+      "user_id", "ts", gapSeconds = 60)
     val sq = sOut.writeStream.format("memory").queryName("gate_sessions")
       .outputMode("append").start()
     for (b <- 0 until 3) {
@@ -1228,13 +1228,13 @@ class StreamingOpsSpec extends AnyFunSuite {
       5L -> false))
   }
 
-  test("streamingSessionizeNative: sessions emit after the watermark closes them") {
+  test("sessionizeNative on a watermarked stream: sessions emit after the watermark closes them") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp)]
-    val out = StreamingOps.streamingSessionizeNative(
-      mem.toDF().toDF("user_id", "ts"), "user_id", "ts",
-      gapSeconds = 60, watermark = "10 seconds")
+    val out = graft.operators.Windowed.sessionizeNative(
+      mem.toDF().toDF("user_id", "ts").withWatermark("ts", "10 seconds"),
+      "user_id", "ts", gapSeconds = 60)
     val q = out.writeStream.format("memory").queryName("native_sessions")
       .outputMode("append").start()
     mem.addData((1L, ts("2024-01-01 00:00:00")),
