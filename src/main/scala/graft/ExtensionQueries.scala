@@ -3226,9 +3226,9 @@ object ExtensionQueries {
         "doc_id", "conv")
         .select(col("doc_id"), col("n_copies")))),
 
-    // the monster-family row, kept under its name on the SAME oracle
-    // text: the one-pass min_by exemplar aggregate it was added for is
-    // now dedupByAssistant's only plan, so it runs the same operator
+    // the monster-family row (r17), kept on the SAME oracle text: it
+    // grades the one-pass min_by exemplar aggregate, which is
+    // dedupByAssistant's one plan
     "q_chat_dedup_skewed" -> ((s, dir) =>
       det(graft.operators.Chat.dedupByAssistant(chatFrame(s, dir),
         "doc_id", "conv")
@@ -3584,9 +3584,9 @@ object ExtensionQueries {
         .select(col("doc_id"), col("n_copies")))
     }),
 
-    // the monster-family row, kept under its name on the SAME oracle
-    // text: the one-pass min_by exemplar aggregate it was added for is
-    // now dedupPairs' only plan, so it runs the same operator
+    // the monster-family row (r17), kept on the SAME oracle text: it
+    // grades the one-pass min_by exemplar aggregate, which is
+    // dedupPairs' one plan
     "q_pref_dedup_skewed" -> ((s, dir) => {
       val base = validPairFrame(s, dir)
       val resampled = base.filter(pmod(col("doc_id"), lit(10)) === 0)
