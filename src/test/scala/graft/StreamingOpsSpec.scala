@@ -1228,7 +1228,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       5L -> false))
   }
 
-  test("sessionizeNative on a watermarked stream: sessions emit after the watermark closes them") {
+  test("watermarked sessionizeNative: sessions emit after the watermark closes them") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp)]
