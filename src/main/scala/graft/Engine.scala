@@ -55,13 +55,13 @@ object Engine extends Logging {
     }
 
   /** Compile one table (no execution) — the unit the tests exercise.
-    * broadcastDims defaults to false: let Catalyst pick broadcast vs
-    * sort-merge from dim stats (the 100 TB-safe default). */
-  def plan(cfg: TableConfig, catalog: Catalog, broadcastDims: Boolean = false,
+    * Catalyst picks broadcast vs sort-merge for lookup dims from their
+    * stats (the 100 TB-safe default). */
+  def plan(cfg: TableConfig, catalog: Catalog,
            global: GlobalConfig = GlobalConfig()): MigrationCompiler.CompiledTable = {
     val (source, wherePushed) = scanVia(cfg, global, catalog)
     MigrationCompiler.compile(cfg, source, catalog.tableOpt, wherePushed = wherePushed,
-      broadcastDims = broadcastDims, global = global)
+      global = global)
   }
 
   /** Full run: schedule into waves -> compile -> assert error-rules ->
@@ -76,7 +76,6 @@ object Engine extends Logging {
     *   consistent even against a live JDBC source mutating between the
     *   two outputs. Opt-in: the cache has a real memory/disk cost. */
   def migrate(cfg: EtlConfig, catalog: Catalog, sink: Sink,
-              broadcastDims: Boolean = false,
               maxParallelTables: Int = 4,
               quarantine: Option[Sink] = None): MigrationReport = {
     // `written` (and lookup rules, mirroring the reference's unqualified
@@ -109,7 +108,7 @@ object Engine extends Logging {
       // Idempotent, so per-table install is free.
       graft.operators.CapMetrics.install(source.sparkSession)
       val compiled = MigrationCompiler.compile(t, source, resolve,
-        wherePushed = wherePushed, broadcastDims = broadcastDims, global = cfg.global,
+        wherePushed = wherePushed, global = cfg.global,
         wantRejected = quarantine.isDefined)
       val tableSink = named(t.loaderPlugin.orElse(Some(cfg.global.loaderPlugin)),
         "default_loader", graft.plugins.PluginRegistry.loader, "loader")

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.functions.CaseMapping.graftLower
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,7 +61,7 @@ object TextFunctions {
   )
 
   private def letterTokens(text: Column): Column =
-    array_distinct(regexp_extract_all(lower(text), lit("[a-zà-ÿäöüß]+"), lit(0)))
+    array_distinct(regexp_extract_all(graftLower(text), lit("[a-zà-ÿäöüß]+"), lit(0)))
 
   def cjkCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[\\x{4e00}-\\x{9fff}]"), lit(0))).cast(LongType)
@@ -372,7 +373,7 @@ object TextFunctions {
     })
 
   /** Canonical form for normalization-INVARIANT dedup: Unicode NFC
-    * (composed accents — see [[NfcNormalize]]), casefold via `lower`,
+    * (composed accents — see [[NfcNormalize]]), casefold via [[CaseMapping]]`.graftLower`,
     * every whitespace run collapsed to one space, ends trimmed. Two
     * crawls of the same page differing only in encoding form, case or
     * formatting whitespace then share one fingerprint — feed this to
@@ -380,7 +381,7 @@ object TextFunctions {
     * the normalized flavor of exact dedup. Zero shuffle: one native
     * call + three codegen'd string ops riding the scan. */
   def normalizeForDedup(text: Column): Column =
-    trim(regexp_replace(lower(NfcNormalize.nfcNormalize(text)), "\\s+", " "))
+    trim(regexp_replace(graftLower(NfcNormalize.nfcNormalize(text)), "\\s+", " "))
 
   /** AGGRESSIVE canonical form for near-boilerplate dedup — the CCNet/
     * Gopher-style normalization that also erases the cosmetic edits
@@ -396,7 +397,7 @@ object TextFunctions {
   def normalizeAggressive(text: Column): Column =
     trim(regexp_replace(
       regexp_replace(
-        regexp_replace(lower(NfcNormalize.nfcNormalize(text)),
+        regexp_replace(graftLower(NfcNormalize.nfcNormalize(text)),
           "[!-/:-@\\[-`{-~]", " "),
         "[0-9]", "0"),
       "\\s+", " "))

@@ -38,14 +38,14 @@ object TransformOps {
   // trim() removes spaces only — so `strip` compiles to a regex strip.
   register("strip", ifString(regexp_replace(_, "^\\s+|\\s+$", "")))
   register("trim", ifString(trim(_)))
-  register("upper", ifString(upper(_)))
-  register("lower", ifString(lower(_)))
-  // capitalize: Python str.capitalize (first char upper, rest LOWER) — named
-  // in the reference's example config (config/tables/table_example.yaml:30).
-  register("capitalize", ifString(c =>
-    when(c.isNull, lit(null).cast(StringType))
-      .otherwise(concat(upper(substring(c, 1, 1)), lower(c.substr(lit(2), length(c)))))))
-  // initcap variant for callers who want word-capitalization
+  // All three map case through the one graft kernel (CaseMapping), not
+  // Spark's lower/upper, whose first call per JVM builds a title-case table.
+  register("upper", ifString(CaseMapping.graftUpper))
+  register("lower", ifString(CaseMapping.graftLower))
+  // capitalize: Python str.capitalize (first char title-cased, rest LOWER) —
+  // named in the reference's example config (config/tables/table_example.yaml:30).
+  register("capitalize", ifString(CaseMapping.graftCapitalize))
+  // initcap variant for callers who want word-capitalization (Spark's InitCap)
   register("initcap", ifString(initcap(_)))
   // to_int / to_date: named-but-site-provided in the reference
   // (config/tables/table_example.yaml:30,54); permissive cast (invalid -> null).

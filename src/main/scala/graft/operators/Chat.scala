@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.CaseMapping.graftLower
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -41,7 +42,7 @@ object Chat {
     * whitespace-collapsed, trimmed. Shared so batch and stream
     * decisions cannot drift. */
   private[graft] def assistantNorm(convCol: String): Column =
-    trim(regexp_replace(lower(array_join(
+    trim(regexp_replace(graftLower(array_join(
       transform(filter(col(convCol), t => t.getField("role") === "assistant"),
         t => t.getField("content")), " ")), "\\s+", " "))
 
@@ -100,7 +101,9 @@ object Chat {
     // into the scan-side Filter — 4.9 s single-task on q_pipeline_chat).
     // The fence pins the staged conv where it was staged; flags
     // evaluate over the materialized attribute (OptimizerFence
-    // scaladoc has the full story).
+    // scaladoc has the full story). The staged non-system turn list is
+    // fenced the same way: starts_user and alternates read it four
+    // times, and unfenced the pushed filter rebuilt it for each read.
     val conv = col("__convf")
     val vocab = RoleVocab ++ extraRoles
     val nonSys = col("__nonsys")
@@ -125,7 +128,8 @@ object Chat {
       exists(conv, t => !t.getField("role").isin(vocab: _*)), lit(false))
     df.withColumn("__convf",
         graft.functions.OptimizerFence.fence(col(convCol)))
-      .withColumn("__nonsys", filter(conv, t => t.getField("role") =!= "system"))
+      .withColumn("__nonsys", graft.functions.OptimizerFence.fence(
+        filter(conv, t => t.getField("role") =!= "system")))
       .withColumn("starts_user", startsUser)
       .withColumn("alternates", alternates)
       .withColumn("ends_assistant", endsAssistant)

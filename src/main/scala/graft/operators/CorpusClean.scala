@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.CaseMapping.graftLower
 import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -44,7 +45,7 @@ object CorpusClean {
    *
    * 100 TB design: the list compiles to ONE codegen'd boolean chain of
    * `contains` over the lowercased text (subexpression elimination
-   * computes `lower(text)` once) — per-row, zero shuffle, no join, and
+   * computes the lowered text once) — per-row, zero shuffle, no join, and
    * short-circuiting on the first hit. This shape is right for the
    * typical curated list (10²–10³ phrases); a 10⁵-phrase list wants a
    * token-level broadcast semi-join or an Aho-Corasick UDF instead —
@@ -54,7 +55,7 @@ object CorpusClean {
   def blocklistFilter(docs: DataFrame, textCol: String, phrases: Seq[String],
                       keepMatches: Boolean = false): DataFrame = {
     require(phrases.nonEmpty, "phrases must be non-empty")
-    val lowered = lower(col(textCol))
+    val lowered = graftLower(col(textCol))
     val hit = phrases.map(p => lowered.contains(p.toLowerCase))
       .reduce(_ || _)
     docs.filter(if (keepMatches) hit else !hit)
@@ -78,7 +79,7 @@ object CorpusClean {
     val stopArr = array(stopwords.map(w => lit(w.toLowerCase)): _*)
     docs.withColumn(textCol,
       array_join(filter(split(col(textCol), " "),
-        t => !array_contains(stopArr, lower(t))), " "))
+        t => !array_contains(stopArr, graftLower(t))), " "))
   }
 
   /** Full-line (after-trim, lowercased) web furniture removed by
@@ -140,7 +141,7 @@ object CorpusClean {
           cnt(l, "[A-Z]").cast(DoubleType) / letters > maxUpperRatio) &&
         !(length(l) > 0 &&
           cnt(l, "[0-9]").cast(DoubleType) / length(l) > maxDigitRatio) &&
-        !array_contains(boilerArr, lower(trim(l)))
+        !array_contains(boilerArr, graftLower(trim(l)))
     }
     val staged = docs
       .withColumn("__lines", split(col(textCol), "\n"))
@@ -201,7 +202,7 @@ object CorpusClean {
       .withColumn("__lines", when(col(textCol).isNotNull,
         split(col(textCol), "\n")))
       .withColumn("__normed", transform(col("__lines"),
-        l => trim(regexp_replace(lower(l), "\\s+", " "))))
+        l => trim(regexp_replace(graftLower(l), "\\s+", " "))))
       .withColumn("__kept", when(col("__lines").isNotNull, keptIdx))
       .withColumn("n_lines", when(col("__lines").isNotNull,
         size(col("__lines")).cast(LongType)))

@@ -29,11 +29,10 @@ import java.util.concurrent.atomic.AtomicInteger
  * UPDATE…FROM dance — collapses into one self-join on the DataFrame
  * before writing: no tmp columns, no second pass over the target.
  *
- * Scale note (100 TB): dims are joined WITHOUT a forced broadcast hint
- * by default — Catalyst broadcasts below
- * `spark.sql.autoBroadcastJoinThreshold` and falls back to sort-merge
- * above it, which is exactly the degradation path we want. Pass
- * `hintBroadcast=true` for dims known to be small.
+ * Scale note (100 TB): dims are joined WITHOUT a broadcast hint —
+ * Catalyst broadcasts below `spark.sql.autoBroadcastJoinThreshold` and
+ * falls back to sort-merge above it, which is exactly the degradation
+ * path we want (a forced hint on an unbounded dim OOMs executors).
  */
 object LookupOps {
 
@@ -59,18 +58,16 @@ object LookupOps {
       targetCol: String,
       lookup: LookupConfig,
       dim: DataFrame,
-      hintBroadcast: Boolean = false,
       deferSkip: Boolean = false): LookupResult = {
     val id = ctr.incrementAndGet()
     val kc = s"__lk_key_$id"
     val vc = s"__lk_val_$id"
     val valueCol = lookup.valueColumn.getOrElse(lookup.keyColumn)
-    val dimSide0 = dim
+    val dimSide = dim
       .select(col(lookup.keyColumn).cast(StringType).as(kc),
               col(valueCol).cast(StringType).as(vc))
       .where(col(kc).isNotNull)
       .groupBy(col(kc)).agg(min(col(vc)).as(vc))
-    val dimSide = if (hintBroadcast) broadcast(dimSide0) else dimSide0
 
     val key = col(targetCol).cast(StringType)
     var joined = df.join(dimSide, key === col(kc), "left")
@@ -121,14 +118,12 @@ object LookupOps {
       df: DataFrame,
       targetCol: String,
       lookup: LookupConfig,
-      dim: DataFrame,
-      hintBroadcast: Boolean = false): (DataFrame, String) = {
+      dim: DataFrame): (DataFrame, String) = {
     val id = ctr.incrementAndGet()
     val kc = s"__ex_key_$id"
     val okCol = s"__ex_ok_$id"
-    val dimSide0 = dim.select(col(lookup.keyColumn).cast(StringType).as(kc))
+    val dimSide = dim.select(col(lookup.keyColumn).cast(StringType).as(kc))
       .where(col(kc).isNotNull).distinct()
-    val dimSide = if (hintBroadcast) broadcast(dimSide0) else dimSide0
     val joined = df.join(dimSide, col(targetCol).cast(StringType) === col(kc), "left")
     // NULL values bypass validation (default_validation.py:17-19)
     (joined.withColumn(okCol, col(targetCol).isNull || col(kc).isNotNull).drop(kc), okCol)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.CaseMapping.graftLower
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -48,14 +49,14 @@ object Preference {
     * family's [[Chat.assistantNorm]] applies, so pair and chat dedup
     * decisions cannot drift. NULL is as empty as "". */
   private[graft] def respNorm(c: Column): Column =
-    trim(regexp_replace(lower(coalesce(c, lit(""))), "\\s+", " "))
+    trim(regexp_replace(graftLower(coalesce(c, lit(""))), "\\s+", " "))
 
   /** Normalized render of a prompt conversation: `role:content` per
     * turn joined on newlines, then the same lowercase/collapse canon.
     * The role prefix keeps a user turn and an assistant turn with
     * equal text from colliding. */
   private[graft] def promptNorm(convCol: String): Column =
-    trim(regexp_replace(lower(array_join(
+    trim(regexp_replace(graftLower(array_join(
       transform(col(convCol), t => concat(
         coalesce(t.getField("role"), lit("")), lit(":"),
         coalesce(t.getField("content"), lit("")))), "\n")), "\\s+", " "))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.CaseMapping.graftLower
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -3277,7 +3278,7 @@ object TextStats {
         size(lines)).as("frac_bullet_lines"),
       (size(filter(lines, l => trim(l).rlike("(\\.\\.\\.|…)$"))).cast(DoubleType) /
         size(lines)).as("frac_ellipsis_lines"),
-      size(array_intersect(array_distinct(transform(words, w => lower(w))), stopArr))
+      size(array_intersect(array_distinct(transform(words, w => graftLower(w))), stopArr))
         .cast(LongType).as("n_stopwords"))
     val flags = Seq(
       "pass_word_count" -> col("n_words").between(minWords, maxWords),

@@ -82,11 +82,6 @@ object MigrationCompiler extends Logging {
    * @param wherePushed  true when the where-string was already pushed
    *                     verbatim into the source scan (Oracle-dialect JDBC
    *                     mode, SURVEY §7.5.6) and must not be re-applied
-   * @param broadcastDims hint lookup dims as broadcast. Default FALSE —
-   *                      Catalyst broadcasts below
-   *                      autoBroadcastJoinThreshold from stats and degrades
-   *                      to sort-merge above it, the 100 TB-safe path; a
-   *                      forced hint on an unbounded dim OOMs executors.
    * @param global  global config carrying the plugin chains
    *                (auto_mapping_plugin / transform_plugins /
    *                validation_plugins) the compile path dispatches on —
@@ -105,7 +100,6 @@ object MigrationCompiler extends Logging {
       source: DataFrame,
       resolve: String => Option[DataFrame],
       wherePushed: Boolean = false,
-      broadcastDims: Boolean = false,
       global: GlobalConfig = GlobalConfig(),
       wantRejected: Boolean = false): CompiledTable = {
 
@@ -237,7 +231,7 @@ object MigrationCompiler extends Logging {
     mappings.filter(r => r.lookup.exists(_.table != cfg.targetTable)).foreach { r =>
       val lk = r.lookup.get
       val res = LookupOps.externalLookup(df, r.targetName, lk, dim(lk.table),
-        broadcastDims, deferSkip = true)
+        deferSkip = true)
       df = res.df
       res.abortViolationCol.foreach { violCol =>
         df = df.withColumn(violCol, aliveSoFar && col(violCol))
@@ -260,7 +254,7 @@ object MigrationCompiler extends Logging {
         case "lookup" =>
           val lk = vr.lookup.getOrElse(
             throw new IllegalArgumentException(s"lookup validation on $tgt needs a lookup block"))
-          val (joined, okCol) = LookupOps.existenceProbe(df, tgt, lk, dim(lk.table), broadcastDims)
+          val (joined, okCol) = LookupOps.existenceProbe(df, tgt, lk, dim(lk.table))
           df = joined
           col(okCol)
         case _ => ValidationCompiler.okPredicate(vr, col(tgt), dt)

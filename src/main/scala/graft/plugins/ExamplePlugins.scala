@@ -1,5 +1,6 @@
 package graft.plugins
 
+import graft.functions.CaseMapping.graftLower
 import graft.functions.TransformOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -18,7 +19,7 @@ final class NormalizeNamesPlugin extends TransformPlugin {
     "normalize_names" -> ((c, dt) =>
       if (dt != StringType) c
       else regexp_replace(
-        regexp_replace(lower(trim(c)), "[^a-z0-9]+", "_"), "^_+|_+$", "")),
+        regexp_replace(graftLower(trim(c)), "[^a-z0-9]+", "_"), "^_+|_+$", "")),
   )
 }
 

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /**
  * Sink abstraction — the reference's loader surface
@@ -218,7 +219,7 @@ final case class JdbcSink(
             conn.commit()
           } finally { del.close(); ins.close() }
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             try conn.rollback() catch { case _: java.sql.SQLException => () }
             throw e
         } finally conn.close()
@@ -262,7 +263,7 @@ final case class JdbcSink(
             conn.commit()
           } finally del.close()
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             try conn.rollback() catch { case _: java.sql.SQLException => () }
             throw e
         } finally conn.close()

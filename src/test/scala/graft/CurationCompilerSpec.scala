@@ -287,10 +287,12 @@ class CurationCompilerSpec extends AnyFunSuite {
     }
   }
 
-  test("validate_filter compiles to one scan, one fence and no semi-join") {
+  test("validate_filter compiles to one scan, one fence per staged column and no semi-join") {
     // conv COMPUTED from a scanned column: the shape whose pushed
     // filter(chat_ok) would substitute the conv construction into a
-    // scan-side predicate if the staged conv were not fenced
+    // scan-side predicate if the staged conv were not fenced; the
+    // non-system turn list the flags read four times is staged and
+    // fenced the same way
     val dir = java.nio.file.Files.createTempDirectory("graft_chat_validate")
     try {
       spark.range(60).select(col("id").as("doc_id"),
@@ -320,7 +322,13 @@ class CurationCompilerSpec extends AnyFunSuite {
       val fences = nodes.flatMap(_.expressions.flatMap(_.collect {
         case f: graft.functions.OptimizerFence => f
       }))
-      assert(fences.size == 1, s"conv staged once behind one fence, got ${fences.size}")
+      assert(fences.size == 2,
+        s"conv and the non-system turns staged behind one fence each, got ${fences.size}")
+      val turnFilters = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case f: org.apache.spark.sql.catalyst.expressions.ArrayFilter => f
+      }))
+      assert(turnFilters.size == 1,
+        s"the non-system turn list is built once, got ${turnFilters.size}")
     } finally {
       java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))

@@ -307,6 +307,24 @@ class JdbcIntegrationSpec extends AnyFunSuite {
       "a replayed micro-batch must converge, not duplicate")
   }
 
+  test("upsert: a partition that fails mid-batch rolls back and leaves the table as it was") {
+    import spark.implicits._
+    exec("""CREATE TABLE upsnn ("k" INT NOT NULL, "v" VARCHAR(20) NOT NULL)""")
+    // batchSize 1 flushes each row's delete+insert before the next row,
+    // so the NOT NULL violation lands after earlier rows were applied
+    val s = JdbcSink(url, "", "", batchSize = 1)
+    def state(): Map[Int, String] =
+      spark.read.format("jdbc").option("url", url).option("dbtable", "upsnn")
+        .load().collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    s.upsert("upsnn", Seq((1, "a"), (2, "b")).toDF("k", "v"), Seq("k"))
+    val bad = Seq[(Int, String)]((1, "A"), (2, "B"), (3, null)).toDF("k", "v")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1") // all three rows in one partition
+    try intercept[org.apache.spark.SparkException](s.upsert("upsnn", bad, Seq("k")))
+    finally spark.conf.set("spark.sql.shuffle.partitions", parts)
+    assert(state() == Map(1 -> "a", 2 -> "b"), "the failed partition's updates were rolled back")
+  }
+
   test("streamingCdcUpsert: deletes, updates and inserts land per micro-batch") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -24,10 +24,48 @@ class TransformOpsSpec extends AnyFunSuite {
   }
   test("capitalize is Python str.capitalize: first upper, REST LOWER") {
     assert(evalStr("capitalize", "bUILDING") == "Building")
+    // Python >= 3.8: the first character takes its full title-case
+    // mapping, the rest is lower-cased (final sigma included)
+    assert(evalStr("capitalize", "ǆemal") == "ǅemal")
+    assert(evalStr("capitalize", "ßa") == "Ssa")
+    assert(evalStr("capitalize", "ﬁsh") == "Fish")
+    assert(evalStr("capitalize", "ΟΔΟΣ") == "Οδος")
+    assert(evalStr("capitalize", "1ABC") == "1abc")
+    assert(evalStr("capitalize", "") == "")
   }
   test("capitalize passes null through") {
     assert(Seq[String](null).toDF("v")
       .select(TransformOps("capitalize", col("v"), StringType)).collect().head.isNullAt(0))
+  }
+  test("compiled migration and chat fingerprint plans hold no Catalyst Lower, Upper or InitCap") {
+    import graft.config.{MappingRule, TableConfig}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+    def caseNodes(df: DataFrame): Seq[String] =
+      df.queryExecution.analyzed.flatMap(_.expressions).flatMap(_.collect {
+        case e @ (_: Lower | _: Upper | _: InitCap) => e.prettyName
+      })
+    def rule(src: String, tgt: String, op: String) =
+      MappingRule(source = Some(src), target = Some(tgt), transform = List(op))
+    val source = Seq((1, "bUILDING", "Ab", "Cd")).toDF("id", "seg", "lo", "up")
+    val cfg = TableConfig(sourceTable = "s", targetTable = "t", mappings = List(
+      MappingRule(source = Some("id"), target = Some("id")),
+      rule("seg", "seg", "capitalize"), rule("lo", "lo", "lower"), rule("up", "up", "upper")))
+    val migrated = graft.plans.MigrationCompiler.compile(cfg, source, _ => None).dataFrame
+    assert(caseNodes(migrated).isEmpty, caseNodes(migrated))
+    assert(migrated.collect().head.toSeq == Seq(1, "Building", "ab", "CD"))
+
+    val convs = Seq((1L, "Q", "Use MERGE  sort"), (2L, "q", "use merge sort"))
+      .toDF("id", "u", "a")
+      .select(col("id"), array(
+        struct(lit("user").as("role"), col("u").as("content")),
+        struct(lit("assistant").as("role"), col("a").as("content"))).as("conv"))
+    val fingerprint = convs.select(graft.operators.Chat.assistantNorm("conv").as("fp"))
+    assert(caseNodes(fingerprint).isEmpty, caseNodes(fingerprint))
+    assert(fingerprint.as[String].collect().toSet == Set("use merge sort"))
+    val deduped = graft.operators.Chat.dedupByAssistant(convs, "id", "conv")
+    assert(caseNodes(deduped).isEmpty, caseNodes(deduped))
+    assert(deduped.select("id").as[Long].collect().toSeq == Seq(1L))
   }
   test("initcap word-capitalizes") {
     assert(evalStr("initcap", "john smith") == "John Smith")
