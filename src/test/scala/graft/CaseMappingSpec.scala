@@ -47,7 +47,7 @@ class CaseMappingSpec extends AnyFunSuite {
     .map(cps => utf8(new String(cps.toArray, 0, cps.size)))
     .toSeq
 
-  test("graft_lower and graft_upper equal Spark's ICU lower and upper, interpreted and codegen") {
+  test("graft_lower/graft_upper equal Spark's ICU lower/upper, interpreted and codegen") {
     assert(SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED),
       "the reference is Spark's default ICU path")
     val in = BoundReference(0, StringType, nullable = true)
@@ -62,13 +62,6 @@ class CaseMappingSpec extends AnyFunSuite {
       assert(at(0) == at(1), s"$path lower of '$s'")
       assert(at(2) == at(3), s"$path upper of '$s'")
     }
-  }
-
-  test("graft_capitalize title-cases the first code point and lowers the rest") {
-    val got = Seq("ǆemal", "ßa", "ﬁsh", "ΑΣ", "'hELLO", "𐐨𐐀x", "áB", "bUILDING", "", null)
-      .toDF("v").select(CaseMapping.graftCapitalize(col("v"))).as[String].collect().toSeq
-    // Python 3.11 str.capitalize of the same inputs
-    assert(got == Seq("ǅemal", "Ssa", "Fish", "Ας", "'hello", "𐐀𐐨x", "Áb", "Building", "", null))
   }
 
   test("input other than the default string type fails analysis, naming the type") {

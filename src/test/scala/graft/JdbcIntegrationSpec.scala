@@ -307,7 +307,7 @@ class JdbcIntegrationSpec extends AnyFunSuite {
       "a replayed micro-batch must converge, not duplicate")
   }
 
-  test("upsert: a partition that fails mid-batch rolls back and leaves the table as it was") {
+  test("upsert: a partition failing mid-batch rolls back, leaving the table as it was") {
     import spark.implicits._
     exec("""CREATE TABLE upsnn ("k" INT NOT NULL, "v" VARCHAR(20) NOT NULL)""")
     // batchSize 1 flushes each row's delete+insert before the next row,

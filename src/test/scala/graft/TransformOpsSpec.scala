@@ -30,6 +30,11 @@ class TransformOpsSpec extends AnyFunSuite {
     assert(evalStr("capitalize", "ßa") == "Ssa")
     assert(evalStr("capitalize", "ﬁsh") == "Fish")
     assert(evalStr("capitalize", "ΟΔΟΣ") == "Οδος")
+    assert(evalStr("capitalize", "ΑΣ") == "Ας")
+    assert(evalStr("capitalize", "𐐨𐐀x") == "𐐀𐐨x")
+    assert(evalStr("capitalize", "áB") == "Áb")
+    // no break adjustment: a leading non-letter is the "first character"
+    assert(evalStr("capitalize", "'hELLO") == "'hello")
     assert(evalStr("capitalize", "1ABC") == "1abc")
     assert(evalStr("capitalize", "") == "")
   }
@@ -37,7 +42,7 @@ class TransformOpsSpec extends AnyFunSuite {
     assert(Seq[String](null).toDF("v")
       .select(TransformOps("capitalize", col("v"), StringType)).collect().head.isNullAt(0))
   }
-  test("compiled migration and chat fingerprint plans hold no Catalyst Lower, Upper or InitCap") {
+  test("migration and chat fingerprint plans hold no Catalyst Lower, Upper or InitCap") {
     import graft.config.{MappingRule, TableConfig}
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
