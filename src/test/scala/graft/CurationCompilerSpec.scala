@@ -287,7 +287,7 @@ class CurationCompilerSpec extends AnyFunSuite {
     }
   }
 
-  test("validate_filter compiles to one scan, a fence per staged column, no semi-join") {
+  test("validate_filter compiles to one scan, two fences and no semi-join") {
     // conv COMPUTED from a scanned column: the shape whose pushed
     // filter(chat_ok) would substitute the conv construction into a
     // scan-side predicate if the staged conv were not fenced; the
